@@ -648,7 +648,13 @@ def simhash_near_pairs(
     Pigeonhole banding: split the 64-bit fingerprint into 64/band_bits
     pieces; any pair within distance d < #pieces must collide on one piece
     — so candidates come from an equi-join on (piece_idx, piece), then the
-    exact popcount filter."""
+    exact popcount filter.
+
+    PRECONDITION: ``id`` is unique in ``fingerprints`` (one fingerprint
+    per document). The emit-once guarantee — each qualifying pair exactly
+    once, as ``id_a < id_b`` — rests on it: two rows sharing an id would
+    multiply that id's pairs, and a self-pair of equal ids is never
+    emitted. Deduplicate on ``id`` upstream when the input may repeat it."""
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
     # the banded frame self-joins: persist it (4 small rows per doc) so the

@@ -128,9 +128,9 @@ def hadoop_list_partition_dirs(
     to build TARGETED pruned reads (explicit dir paths + basePath):
     reading the root and filtering ``isin(values)`` lists EVERY partition
     dir first — at thousands of buckets that O(all dirs) file-discovery
-    job dwarfs the pruned scan itself (measured for the near-dup state in
-    tools/neardup_state_experiment.py; the same economics apply to any
-    bucket-partitioned table on an object store)."""
+    job dwarfs the pruned scan itself (measured for the near-dup state,
+    SCALE.md r09; the same economics apply to any bucket-partitioned
+    table on an object store)."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())

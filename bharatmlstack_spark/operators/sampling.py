@@ -51,11 +51,6 @@ def knuth_mix(key: Column | str) -> Column:
     return (c % F.lit(MIX_LOW)) * F.lit(KNUTH) + F.shiftright(c, 20) * F.lit(MIX_HI)
 
 
-def knuth_mix_sql(col: str) -> str:
-    """DuckDB twin of knuth_mix — paste into oracle SQL."""
-    return f"(({col} % 1048576) * 2654435761 + ({col} // 1048576) * 40503)"
-
-
 def hash_fraction(key: Column | str, modulus: int = 10000) -> Column:
     """Deterministic pseudo-uniform value in [0, modulus) from an integer
     key. Pure int arithmetic -> identical in Spark / DuckDB / anything."""

@@ -28,6 +28,54 @@ from pyspark.sql import functions as F
 from bharatmlstack_spark.operators.event_store import EventStore
 from bharatmlstack_spark.operators.feature_store import FeatureStore, hadoop_path_exists
 
+# the lifecycle's names stay importable from here (tests, queries, tools)
+from bharatmlstack_spark.streaming.state import (  # noqa: F401
+    ASIDE_SUFFIX,
+    CLUSTERS,
+    DOCLEN_DIR,
+    GEN_MAX,
+    IVF,
+    IVF_ID_BUCKETS,
+    IVF_IDS_SUFFIX,
+    IVF_TOMBSTONES_DIR,
+    MAINT_COUNTER_KEY,
+    MAINT_FULLDELETE_KEY,
+    MAINT_LAST_BATCH_KEY,
+    MAINT_REDELIVERY_KEY,
+    MAINT_ROWS_KEY,
+    NEARDUP,
+    NEARDUP_TOMBSTONES_DIR,
+    POSTINGS,
+    POSTINGS_DIR,
+    POSTINGS_REBUCKET_MARKER,
+    QUANTIZER_DIR_SUFFIX,
+    REBUCKET_MARKER,
+    REFIT_MARKER_SUFFIX,
+    TOMBSTONES_DIR,
+    commit_stages,
+    compact_root,
+    delete_ids,
+    drop_cached_stats,
+    edit_meta,
+    ensure_root_layout,
+    fold_tombstones,
+    new_size,
+    open_root,
+    outgrown,
+    read_tombstones,
+    rebucket_root,
+    replace_root,
+)
+from bharatmlstack_spark.streaming.state import (  # noqa: F401
+    append_tombstones as _append_tombstones,
+    detect_duplicate_partitions as _detect_duplicate_partitions,
+    hadoop_rename as _hadoop_rename,
+    mask_tombstoned as _mask_tombstoned,
+    recover_root_swap as _recover_root_swap,
+    resolve_neardup_layout as _resolve_neardup_layout,
+    update_maintenance_meta as _update_maintenance_meta,
+)
+
 # ---------------------------------------------------------------------------
 # sources
 # ---------------------------------------------------------------------------
@@ -215,46 +263,6 @@ def decode_event_requests(
             yield pd.DataFrame(rows, columns=out_cols)
 
     return df.select(value_col).mapInPandas(gen, schema)
-
-
-def protobuf_event_source(
-    spark: SparkSession, brokers: str, topic: str, kind: str
-) -> DataFrame:
-    """S5 with the reference's real wire format: Kafka records whose value
-    is a serialized click/order persist request, decoded distributed via
-    :func:`decode_event_requests` (the interaction-store consumer path,
-    time_series.proto + consumer/kafka.go)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
-    return decode_event_requests(raw, kind, value_col="value")
-
-
-def protobuf_feature_source(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    registry,
-    entity_label: str,
-    key_types: dict[str, str] | None = None,
-) -> DataFrame:
-    """SS1 with the reference's real wire format: Kafka records whose value
-    is a serialized ``persist.Query`` (what the py-sdk Spark push client
-    produces), decoded distributed via :func:`decode_persist_queries`."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
-    return decode_persist_queries(
-        raw, registry, entity_label, value_col="value", key_types=key_types
-    )
 
 
 def parse_embedding_payloads(
@@ -781,124 +789,6 @@ def _list_kb_dirs(spark: SparkSession, path: str) -> dict[int, str]:
     return hadoop_list_partition_dirs(spark, path, "__kb")
 
 
-def _neardup_root_layout(spark: SparkSession, path: str) -> str | None:
-    """Physical layout of one append-only near-dup state root: ``None``
-    (absent/empty), ``'flat'`` (data files at top level), ``'bucketed'``
-    (``__kb=`` partition dirs), or ``'mixed'`` — the damage state this
-    probe exists to catch: ``spark.read.parquet`` over a root holding
-    BOTH returns only the partitioned rows, silently dropping every
-    flat-era doc from the band index and shingle store."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    has_kb = has_flat = False
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue  # _SUCCESS, sidecars
-        if st.isDirectory() and name.startswith("__kb="):
-            has_kb = True
-        else:
-            has_flat = True
-    if has_kb and has_flat:
-        return "mixed"
-    return "bucketed" if has_kb else ("flat" if has_flat else None)
-
-
-def _hadoop_rename(spark: SparkSession, src: str, dst: str) -> None:
-    jvm = spark._jvm
-    jsrc = jvm.org.apache.hadoop.fs.Path(src)
-    fs = jsrc.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)):
-        raise RuntimeError(f"rename {src} -> {dst} failed")
-
-
-def _ensure_neardup_root(
-    spark: SparkSession,
-    path: str,
-    kb_expr,
-    want_bucketed: bool,
-    repair_hint: str = "pass the state_buckets the state was created with "
-    "(recorded in the state dir's meta sidecar)",
-) -> None:
-    """Reconcile one near-dup state root with the REQUESTED layout before
-    the first append of a run — appending the other layout into it would
-    be the silent-loss mixed state (see _neardup_root_layout).
-
-    flat root + bucketed requested: MIGRATE (one-time bounded rewrite:
-    stage the partitioned copy at ``path + '__migrating'``, swap via
-    delete + rename; a crash leaves either the intact original plus a
-    partial/complete stage — partial stages are discarded, complete ones
-    (``_SUCCESS``) are adopted — never a mixed root). bucketed root +
-    flat requested: raise; degrading is refused the same way
-    _resolve_state_layout refuses for CDC state."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
-    tmp = path + "__migrating"
-    layout = _neardup_root_layout(spark, path)
-    if hadoop_path_exists(spark, tmp):
-        if hadoop_path_exists(spark, tmp + "/_SUCCESS"):
-            # complete staged copy: finish the crashed swap
-            if layout is not None:
-                hadoop_delete_path(spark, path)
-            _hadoop_rename(spark, tmp, path)
-            layout = "bucketed"
-        else:
-            hadoop_delete_path(spark, tmp)  # partial write; original intact
-    if layout == "mixed":
-        raise RuntimeError(
-            f"near-dup state root {path} holds BOTH flat files and __kb= "
-            "partition dirs — reads would silently drop the flat rows. "
-            "This root predates the layout guard; repair by re-seeding "
-            "the state (replay the topic) or manually folding the flat "
-            "files into the partitioned layout."
-        )
-    if want_bucketed and layout == "flat":
-        flat = spark.read.parquet(path)
-        (
-            flat.withColumn("__kb", kb_expr(flat))
-            .repartition("__kb")
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .parquet(tmp)
-        )
-        hadoop_delete_path(spark, path)
-        _hadoop_rename(spark, tmp, path)
-    elif not want_bucketed and layout == "bucketed":
-        # the flag that controls each root differs (state_buckets for the
-        # shingle store, bucket_bands for the band index) — the caller
-        # passes the matching repair guidance so the message never points
-        # at the wrong knob
-        raise RuntimeError(
-            f"near-dup state root {path} is bucket-partitioned but this "
-            "run requested the flat layout — flat appends would create "
-            f"the silent-loss mixed root. Repair: {repair_hint}."
-        )
-
-
-def _resolve_neardup_layout(meta: dict | None) -> tuple[int | None, bool]:
-    """The ONE meta-sidecar layout resolution shared by the sink
-    (stream_neardup_minhash_sink._ensure_layout) and
-    compact_neardup_state — writer and compactor MUST agree on the
-    legacy default or the compactor could rewrite a ``__kb=``-partitioned
-    band root flat (destroying the layout the sink then refuses to run
-    against). Returns ``(n_buckets, bands_bucketed)``:
-
-    - no sidecar, or no ``n_buckets`` key (e.g. a flat state whose
-      sidecar holds only maintenance counters): flat everything
-      -> ``(None, False)``;
-    - ``n_buckets`` present, ``bucket_bands`` present: as recorded;
-    - ``n_buckets`` present, ``bucket_bands`` ABSENT: a legacy sidecar
-      from before the hybrid mode, which bucketed BOTH roots
-      -> ``(n_buckets, True)``.
-    """
-    if not meta or meta.get("n_buckets") is None:
-        return None, False
-    return int(meta["n_buckets"]), bool(meta.get("bucket_bands", True))
-
-
 def stream_neardup_minhash_sink(
     stream_df: DataFrame,
     state_dir: str,
@@ -914,7 +804,6 @@ def stream_neardup_minhash_sink(
     state_buckets: int | None = None,
     bucket_bands: bool = False,
     trigger_once: bool = False,
-    phase_log: list | None = None,
     auto_maintain: bool = False,
     maintain_every_n_batches: int = 64,
 ):
@@ -968,7 +857,7 @@ def stream_neardup_minhash_sink(
     the FLAT layout (measured faster there: partitioned appends +
     per-batch bucket collects cost more than the unprunable scans they
     replace — see SCALE.md's 10x rows). Measured regime rule
-    (tools/neardup_state_experiment.py, SCALE.md r09 tables): prefer
+    (SCALE.md r09 tables): prefer
     FLAT for replay-style bulk loads (batch ~= index); the default
     bucketed form (HYBRID — sets partitioned, bands flat) wins once
     batch ≪ index (1.15x e2e at a 1M-doc index, verify prune 6.4x,
@@ -1003,13 +892,7 @@ def stream_neardup_minhash_sink(
     ``compact_neardup_state`` at maintenance cadence to physically
     reclaim the accumulated copies (detect-then-rewrite-touched-dirs,
     measured in SCALE.md). Assumes each doc id arrives once (a corpus
-    build, not a changelog).
-
-    ``phase_log`` (measurement only): pass a list and each micro-batch
-    appends {sign_s, probe_s, verify_s, append_s, total_s} — phase
-    boundaries are forced with count() actions, so instrumented runs
-    are NOT wall-clock-identical to production runs; used by
-    tools/neardup_state_experiment.py to attribute layout costs."""
+    build, not a changelog). On-disk protocol: streaming/state.py."""
     from bharatmlstack_spark.operators.dedup import (
         band_signatures,
         hashed_word_shingles,
@@ -1038,24 +921,13 @@ def stream_neardup_minhash_sink(
     def _ensure_layout() -> None:
         if _layout_ok:
             return
-        import json as _json
-        import os as _os
+        from bharatmlstack_spark.operators.feature_store import read_table_meta
 
-        from bharatmlstack_spark.operators.feature_store import (
-            TABLE_META_FILE,
-            hadoop_write_text_atomic,
-            read_table_meta,
-        )
-
-        # adopt a crashed rebucket_neardup_state commit BEFORE reading
-        # the sidecar — otherwise this run could validate against (and
-        # append under) the pre-rebucket bucket count while the roots
-        # are already hashed with the new one; then restore any root
-        # whose flat compaction swap crashed mid-rename (a missing
-        # bands root would read as an EMPTY index — silent pair loss)
-        _finish_rebucket_commit(spark, state_dir)
-        _recover_root_swap(spark, sets_path)
-        _recover_root_swap(spark, bands_path)
+        # the preamble BEFORE reading the sidecar: a pending re-bucket
+        # commit would otherwise be validated against (and appended
+        # under) the old bucket count, and a mid-swap bands root would
+        # read as an EMPTY index — silent pair loss
+        open_root(spark, NEARDUP, state_dir)
         meta = read_table_meta(spark, state_dir)
         # shared resolution (legacy pre-hybrid sidecars bucketed both
         # roots) — compact_neardup_state resolves with the SAME helper
@@ -1100,7 +972,7 @@ def stream_neardup_minhash_sink(
                 f"(state_buckets={recorded}) but this run passed None — "
                 f"refusing to degrade the layout. Pass state_buckets={recorded}."
             )
-        _ensure_neardup_root(
+        ensure_root_layout(
             spark,
             bands_path,
             lambda df: F.pmod(F.col("band_hash"), F.lit(state_buckets)),
@@ -1109,7 +981,7 @@ def stream_neardup_minhash_sink(
             "index; its layout is controlled by bucket_bands, not "
             "state_buckets)",
         )
-        _ensure_neardup_root(
+        ensure_root_layout(
             spark,
             sets_path,
             lambda df: _set_bucket(F.col("id")),
@@ -1125,22 +997,15 @@ def stream_neardup_minhash_sink(
             # counters (_update_maintenance_meta) that must survive.
             # Signature params are recorded for EVERY layout (flat too) —
             # cross_dedup_against_state derives the probe side from them
-            merged = dict(meta or {})
-            merged.update(sig)
-            if bucketed and recorded is None:
-                merged.update(
-                    {"n_buckets": state_buckets, "bucket_bands": bucket_bands}
-                )
-            hadoop_write_text_atomic(
-                spark,
-                _os.path.join(state_dir, TABLE_META_FILE),
-                _json.dumps(merged),
-            )
+            def record(m: dict) -> None:
+                m.update(sig)
+                if bucketed and recorded is None:
+                    m.update(n_buckets=state_buckets, bucket_bands=bucket_bands)
+
+            edit_meta(spark, state_dir, record)
         _layout_ok.append(True)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
         if batch_df.isEmpty():
             return
         if hadoop_path_exists(
@@ -1154,12 +1019,6 @@ def stream_neardup_minhash_sink(
                 "compact/rebucket pass) before resuming the sink."
             )
         _ensure_layout()
-        # phase_log instrumentation (tools/neardup_state_experiment.py):
-        # forces a count() at each phase boundary so the phases time
-        # separately — measurement mode only, never the production path
-        instrument = phase_log is not None
-        ph: dict[str, float] = {}
-        t0 = _time.perf_counter()
         sets_new = batch_df.select(
             F.col(id_col).alias("id"),
             hashed_word_shingles(text_col, shingle_n).alias("sh"),
@@ -1174,9 +1033,6 @@ def stream_neardup_minhash_sink(
                 )
             bands_new = bands_new.persist()
             try:
-                if instrument:
-                    bands_new.count()
-                    ph["sign_s"] = round(_time.perf_counter() - t0, 3)
                 a, b = bands_new.alias("a"), bands_new.alias("b")
                 intra = (
                     a.join(b, on=["band_idx", "band_hash"])
@@ -1196,8 +1052,8 @@ def stream_neardup_minhash_sink(
                     # Reading the root and filtering isin() would list
                     # every bucket dir first: at state_buckets=4096 the
                     # O(buckets) discovery job dwarfs the probe itself
-                    # (measured in tools/neardup_state_experiment.py);
-                    # targeted paths make listing + read both O(touched).
+                    # (measured, SCALE.md r09); targeted paths make
+                    # listing + read both O(touched).
                     existing = _list_kb_dirs(spark, bands_path)
                     probe_kb = [
                         r[0]
@@ -1222,14 +1078,10 @@ def stream_neardup_minhash_sink(
                     )
                     cands = cands.unionByName(cross)
                 cands = cands.dropDuplicates(["id_a", "id_b"])
-                if bucketed or instrument:
+                if bucketed:
                     # both consumers (bucket collect + verify join) reuse
                     # the computed candidate set instead of re-probing
                     cands = cands.persist()
-                if instrument:
-                    t = _time.perf_counter()
-                    cands.count()
-                    ph["probe_s"] = round(_time.perf_counter() - t, 3)
 
                 # __kb drops before the union: a read-back partition column
                 # comes back as INT while the in-memory one is BIGINT, and
@@ -1283,20 +1135,14 @@ def stream_neardup_minhash_sink(
                     .filter(F.col("jaccard") >= threshold)
                 )
                 try:
-                    if instrument:
-                        t = _time.perf_counter()
                     pairs.write.mode("append").parquet(out_path)
-                    if instrument:
-                        ph["verify_s"] = round(_time.perf_counter() - t, 3)
                 finally:
-                    if bucketed or instrument:
+                    if bucketed:
                         cands.unpersist()
                 # sets BEFORE bands: every doc reachable through the band
                 # index must have a shingle set for the verify join (a
                 # crash between the appends then redelivers the batch,
                 # which only duplicates rows — see docstring)
-                if instrument:
-                    t = _time.perf_counter()
                 _write_state(sets_new, sets_path, bucketed)
                 _write_state(bands_new, bands_path, bands_bucketed)
                 # maintenance bookkeeping (maintenance_due / refit-class
@@ -1319,10 +1165,6 @@ def stream_neardup_minhash_sink(
                         state_dir,
                         every_n_batches=maintain_every_n_batches,
                     )
-                if instrument:
-                    ph["append_s"] = round(_time.perf_counter() - t, 3)
-                    ph["total_s"] = round(_time.perf_counter() - t0, 3)
-                    phase_log.append(ph)
             finally:
                 bands_new.unpersist()
         finally:
@@ -1399,6 +1241,7 @@ def stream_ann_ivf_sink(
     quantizer, arming the guard for every restart."""
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
+    open_root(spark, IVF, index_path)
     _ensure_quantizer_consistent(spark, index_path, ivf)
     meta0 = read_table_meta(spark, index_path)
     if meta0 is not None:
@@ -1475,8 +1318,8 @@ def stream_ann_ivf_sink(
                         "the same generation. Dedup upstream (e.g. last-"
                         "write-wins per id per trigger) before the sink."
                     )
-            # meta BEFORE the appends (the postings sink's ordering,
-            # ingest.py:3395): next_gen_base must roll forward to
+            # meta BEFORE the appends (stream_postings_sink's
+            # ordering): next_gen_base must roll forward to
             # gen_val + 1 before any gen_val row exists — a crash in
             # between the gen-N append and a LATER meta write would
             # leave next_gen_base == N, a fresh checkpoint would pin
@@ -1648,6 +1491,7 @@ def stream_semantic_dedup_sink(
         read_table_meta,
     )
 
+    open_root(spark, IVF, index_path)
     _ensure_quantizer_consistent(spark, index_path, ivf)
     if (read_table_meta(spark, index_path) or {}).get("versioned"):
         raise RuntimeError(
@@ -1775,132 +1619,15 @@ def read_streamed_ivf_index(
     Vectors tombstoned by ``delete_indexed_vectors`` are broadcast-anti-
     joined out — deleted ids leave every search immediately, before the
     next compaction/refit folds them physically."""
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
-    _recover_root_swap(spark, index_path)  # ...or a crashed flat-swap
+    open_root(spark, IVF, index_path)
     df = spark.read.parquet(index_path)
-    tomb = _ivf_tombstones(spark, index_path, id_col)
+    tomb = read_tombstones(spark, f"{index_path}/{IVF_TOMBSTONES_DIR}", id_col)
     if tomb is not None:
         # mask BEFORE the dedup: on a versioned index an id's masked old
         # generation coexists with its replacement, and an id-only
         # dropDuplicates first could keep the dead row
         df = _mask_tombstoned(df, tomb, id_col=id_col)
     return df.dropDuplicates([id_col]) if dedup else df
-
-
-def _compact_dedup_state(
-    spark: SparkSession,
-    path: str,
-    dedup_cols: list[str],
-    partition_col: str | None,
-) -> tuple[int, bool]:
-    """Shared core of the streamed-state compactors: physically drop
-    redelivery-duplicate rows (byte-identical by construction — every
-    sink appends deterministic functions of the delivered record).
-
-    Two-phase so steady state (no redeliveries) costs ONE column-pruned
-    aggregation and zero writes:
-
-    1. detect — per-partition ``count(*) - count_distinct(dedup cols)``
-       (one scan reading only the dedup columns; map-side partial agg);
-    2. rewrite — ONLY the partition dirs holding duplicates, via
-       targeted paths + dynamic partition overwrite (the dedup key
-       determines its partition, so dedup is partition-local and
-       untouched dirs never rewrite). Dedup never empties a non-empty
-       dir, so no emptied-dir sweep is needed (unlike compact_cdc_state
-       whose tombstone GC can drain a bucket).
-
-    Flat (unpartitioned) states fall back to a full staged rewrite —
-    correct at any size, but the partitioned layouts are the 100 TB
-    path. Returns ``(rows_removed, bailed)``: ``bailed`` is True only
-    when duplicates are KNOWN to exist but live solely in dirs the
-    listing can't target (a null key's __HIVE_DEFAULT_PARTITION__) —
-    the callers then preserve the sidecar's redelivery flag instead of
-    consuming the signal for a reclaim that never happened."""
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        hadoop_list_partition_dirs,
-    )
-
-    _recover_root_swap(spark, path)  # restore a crashed flat-swap first
-    if not hadoop_path_exists(spark, path):
-        return 0, False
-    dirs = (
-        hadoop_list_partition_dirs(spark, path, partition_col)
-        if partition_col is not None
-        else {}
-    )
-    state = spark.read.parquet(path)
-    if dirs:
-        per_part = _detect_duplicate_partitions(state, dedup_cols, partition_col)
-        touched = [r[0] for r in per_part.select(partition_col).collect()]
-        if not touched:
-            return 0, False
-        paths = [dirs[p] for p in touched if p in dirs]
-        # a duplicate-holding partition the listing skipped (e.g. a null
-        # key's __HIVE_DEFAULT_PARTITION__ — hadoop_list_partition_dirs
-        # keeps numeric dirs only) cannot be rewritten: its duplicates
-        # SURVIVE this pass, so report the bail-out whether the
-        # untargetable dirs were the only ones (nothing to do at all) or
-        # mixed in with rewritable ones — either way the redelivery
-        # signal must not be consumed for a reclaim that skipped them
-        bailed = len(paths) < len(touched)
-        if not paths:
-            return 0, bailed
-        scoped = spark.read.option("basePath", path).parquet(*paths)
-        before = scoped.count()
-        keep = scoped.dropDuplicates(dedup_cols)
-        tmp = path + "__compacting"
-        (
-            keep.repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(tmp)
-        )
-        staged = spark.read.parquet(tmp)
-        removed = before - staged.count()
-        (
-            staged.repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
-        hadoop_delete_path(spark, tmp)
-        return removed, bailed
-    before = state.count()
-    keep = state.dropDuplicates(dedup_cols)
-    removed = before - keep.count()
-    if not removed:
-        return 0, False
-    # crash-safe flat rewrite: stage, then the aside-swap (a complete
-    # copy exists in some dir at every instant; _recover_root_swap at
-    # the state entry points restores a crash mid-swap) — auto_maintain
-    # runs this inside the sink's own loop, so a plain live overwrite
-    # would put the whole root at risk on every due micro-batch
-    tmp = path + "__compacting"
-    keep.write.mode("overwrite").parquet(tmp)
-    _swap_staged_root(spark, tmp, path)
-    return removed, False
-
-
-def _detect_duplicate_partitions(
-    state: DataFrame, dedup_cols: list[str], partition_col: str
-) -> DataFrame:
-    """The compactors' detection pass as a plan: per-partition
-    ``count(*) - count_distinct(dedup cols) > 0``. Reads ONLY the dedup
-    columns (the fat payload — embeddings, shingle sets — is pruned at
-    the scan; plan-pinned in tests/test_plans.py) with map-side partial
-    aggregation, so the steady-state no-op costs one thin scan."""
-    return (
-        state.groupBy(partition_col)
-        .agg(
-            (
-                F.count(F.lit(1))
-                - F.count_distinct(*[F.col(c) for c in dedup_cols])
-            ).alias("__dups")
-        )
-        .filter(F.col("__dups") > 0)
-    )
 
 
 def compact_streamed_index(
@@ -1911,48 +1638,29 @@ def compact_streamed_index(
     at-least-once redelivery appends byte-identical (id, cell) rows
     forever, and every reader pays a full-index dropDuplicates shuffle
     (read_streamed_ivf_index). This is the once-not-per-read form —
-    the compact_cdc_state analog for the append-only states: dedup-on-id
-    rewrite of ONLY the cell dirs that hold duplicates (assignment is
-    deterministic, so an id's copies all live in one cell dir), O(touched)
-    like the sinks' probe reads. After it runs, readers may pass
+    the compact_cdc_state analog for the append-only states: pending
+    vector deletions fold first, then a dedup-on-id rewrite of ONLY the
+    cell dirs that hold duplicates (assignment is deterministic, so an
+    id's copies all live in one cell dir), O(touched) like the sinks'
+    probe reads. A versioned index dedups on (id, gen) and compacts its
+    ``__ids`` registry too. After it runs, readers may pass
     ``dedup=False``. Reference anchor: skye's indexer reset/rebuild jobs
     (skye/internal/consumers/handler/indexer/) — the stored index is
     periodically rebuilt to shed accumulated writes. Returns rows removed.
     Run at maintenance cadence (after a redelivery event or N batches —
     ``maintenance_due`` / ``maybe_compact_streamed_index`` decide that
-    from the sidecar the sinks maintain), never per micro-batch."""
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
-    # fold pending vector deletions first (also removes the _tombstones
-    # dir before any flat-fallback root swap could drop it silently)
-    fold_index_tombstones(spark, index_path, id_col)
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    # versioned index: gen rides the dedup keys (post-fold each id has
-    # one live gen, but gen-keyed dedup stays conservative if that
-    # invariant ever breaks) and the (id, gen) registry compacts too
-    versioned = (read_table_meta(spark, index_path) or {}).get("versioned")
-    gen = ["gen"] if versioned else []
-    removed, bailed = _compact_dedup_state(
-        spark, index_path, [id_col, *gen], "cell"
-    )
-    reg_root = f"{index_path}{IVF_IDS_SUFFIX}"
-    if versioned and hadoop_path_exists(spark, reg_root):
-        reg_removed, reg_bailed = _compact_dedup_state(
-            spark, reg_root, ["id", "gen"], "id_bucket"
-        )
-        removed += reg_removed
-        bailed = bailed or reg_bailed
-    # a bail-out (duplicates exist but only in non-targetable dirs)
-    # reclaimed nothing: keep the redelivery flag so maintenance_due
-    # keeps reporting the duplicates honestly
-    _reset_maintenance_meta(spark, index_path, clear_redelivery=not bailed)
-    return removed
+    from the sidecar the sinks maintain), never per micro-batch. A pass
+    that could not target every duplicate keeps the redelivery flag.
+    Protocol: streaming/state.py (compact_root)."""
+    return sum(compact_root(spark, IVF, index_path, id_col)[1].values())
 
 
 def compact_neardup_state(spark: SparkSession, state_dir: str) -> dict:
     """Compaction for the streaming near-dup (MinHash) state — the same
     redelivery-duplicate reclaim as compact_streamed_index, applied to
-    both roots the sink maintains (stream_neardup_minhash_sink):
+    both roots the sink maintains (stream_neardup_minhash_sink), after
+    folding pending deletions (which clears the sink's pending-tombstone
+    refusal):
 
     - ``sets`` (shingle store; hybrid default: ``__kb=`` partitioned on
       the doc id): dedup key = id — one row per doc;
@@ -1962,205 +1670,13 @@ def compact_neardup_state(spark: SparkSession, state_dir: str) -> dict:
       byte-identical.
 
     Layout comes from the state's meta sidecar resolved with THE SAME
-    helper the sink uses (_resolve_neardup_layout — in particular the
+    rule the sink uses (state.resolve_neardup_layout — in particular the
     legacy pre-hybrid default: a sidecar recording n_buckets but no
     bucket_bands key means BOTH roots are bucketed, so the compactor
     must rewrite the band root partitioned, never flat); partitioned
     roots rewrite only duplicate-holding dirs (the dedup keys determine
     their bucket). Returns {"sets_removed": n, "bands_removed": m}."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    sets_path = f"{state_dir}/sets"
-    bands_path = f"{state_dir}/bands"
-    _finish_rebucket_commit(spark, state_dir)  # adopt a crashed rebucket
-    # fold pending deletions first: the dedup rewrite must see the
-    # post-deletion state, and the sink's pending-tombstone refusal
-    # clears through any compaction pass
-    fold_neardup_tombstones(spark, state_dir)
-    recorded, bands_bucketed = _resolve_neardup_layout(
-        read_table_meta(spark, state_dir)
-    )
-    bucketed = recorded is not None
-    sets_removed, sets_bailed = _compact_dedup_state(
-        spark, sets_path, ["id"], "__kb" if bucketed else None
-    )
-    bands_removed, bands_bailed = _compact_dedup_state(
-        spark,
-        bands_path,
-        ["id", "band_idx"],
-        "__kb" if bands_bucketed else None,
-    )
-    # either root bailing out means known duplicates survived the pass:
-    # preserve the redelivery flag (see compact_streamed_index)
-    _reset_maintenance_meta(
-        spark, state_dir, clear_redelivery=not (sets_bailed or bands_bailed)
-    )
-    return {"sets_removed": sets_removed, "bands_removed": bands_removed}
-
-
-# commit markers for the reset jobs' staged swaps: written ATOMICALLY
-# after every stage is complete, deleted after adoption — their presence
-# IS the commit point, so a crash anywhere leaves either the intact old
-# state (pre-marker: stages are garbage, cleaned by the next reset run)
-# or a finishable commit (post-marker: _finish_*_commit re-runs the
-# adoption idempotently from any reader/writer entry point)
-REBUCKET_MARKER = "__rebucket_commit.json"
-REFIT_MARKER_SUFFIX = "__refit_commit.json"
-
-
-ASIDE_SUFFIX = "__replaced"
-
-
-def _swap_staged_root(spark: SparkSession, stage: str, live: str) -> None:
-    """Adopt one complete staged root: move the live dir ASIDE, rename
-    the stage over its place, then drop the aside copy. The
-    aside-then-rename order (never delete-live-first) guarantees a
-    complete copy of the data exists in SOME directory (live, aside, or
-    stage) at every instant — a crash at any point, or a second adopter
-    racing this one (concurrent readers all run the commit-recovery
-    path), can strand a copy under the aside name but can never destroy
-    the state: the stranded cases are restored by the retry/recovery
-    re-entry below. A stage already renamed away means another adopter
-    finished — skip. A stage present WITHOUT _SUCCESS under a commit
-    marker is refused loudly (see _require_stage_success — markers are
-    only written after complete stages, so this means _SUCCESS markers
-    are disabled or the stage was corrupted; silently skipping would
-    install the marker's sidecar over un-swapped roots)."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
-    aside = live + ASIDE_SUFFIX
-    if not hadoop_path_exists(spark, stage):
-        # already adopted (possibly by a racing recovery) — if that
-        # racer crashed between its renames, the old copy is stranded
-        # aside while live exists: drop it; if live is MISSING, restore
-        # the aside copy (crash between aside-rename and stage-rename,
-        # with the stage consumed by a third party — restore beats loss)
-        if hadoop_path_exists(spark, live):
-            if hadoop_path_exists(spark, aside):
-                hadoop_delete_path(spark, aside)
-        elif hadoop_path_exists(spark, aside):
-            _hadoop_rename(spark, aside, live)
-        return
-    _require_stage_success(spark, stage)
-    if hadoop_path_exists(spark, aside):
-        hadoop_delete_path(spark, aside)
-    if hadoop_path_exists(spark, live):
-        _hadoop_rename(spark, live, aside)
-    jvm = spark._jvm
-    jstage = jvm.org.apache.hadoop.fs.Path(stage)
-    fs = jstage.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.rename(jstage, jvm.org.apache.hadoop.fs.Path(live)):
-        # lost a race: another adopter consumed the stage between our
-        # existence check and the rename; make sure live holds data
-        if not hadoop_path_exists(spark, live):
-            if hadoop_path_exists(spark, aside):
-                _hadoop_rename(spark, aside, live)
-            else:
-                raise RuntimeError(
-                    f"staged-root adoption failed: {stage} vanished and "
-                    f"{live} is missing with no aside copy"
-                )
-    if hadoop_path_exists(spark, aside) and hadoop_path_exists(spark, live):
-        hadoop_delete_path(spark, aside)
-
-
-def _recover_root_swap(spark: SparkSession, live: str) -> None:
-    """Restore a root whose flat compaction swap (_swap_staged_root from
-    _compact_dedup_state) crashed mid-rename: a missing live dir adopts
-    a complete ``__compacting`` stage, else restores the ``__replaced``
-    aside copy; a stranded aside beside an intact live is dropped.
-    Called from the state entry points (sink layout check, compactor,
-    probes, readers) — one or two FS existence checks in the common
-    no-op case. Without this, a sink restarted after such a crash would
-    see hadoop_path_exists(bands)=False and silently treat the whole
-    accumulated index as empty."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
-    tmp, aside = live + "__compacting", live + ASIDE_SUFFIX
-    if not hadoop_path_exists(spark, live):
-        if hadoop_path_exists(spark, tmp + "/_SUCCESS"):
-            _hadoop_rename(spark, tmp, live)
-        elif hadoop_path_exists(spark, aside):
-            _hadoop_rename(spark, aside, live)
-    elif hadoop_path_exists(spark, aside):
-        hadoop_delete_path(spark, aside)
-
-
-def _require_stage_success(spark: SparkSession, stage: str) -> None:
-    if not hadoop_path_exists(spark, stage + "/_SUCCESS"):
-        raise RuntimeError(
-            f"staged root {stage} exists but has no _SUCCESS marker — "
-            "either mapreduce.fileoutputcommitter.marksuccessfuljobs is "
-            "disabled (the reset jobs' commit protocol requires it) or "
-            "the stage is a partial write; refusing to adopt or commit "
-            "over it. Re-run the reset job with _SUCCESS markers "
-            "enabled, or delete the stage to discard it."
-        )
-
-
-def _finish_rebucket_commit(spark: SparkSession, state_dir: str) -> bool:
-    """(Re-)run a rebucket_neardup_state adoption whose commit marker
-    exists: swap any staged roots still present, install the marker's
-    sidecar, drop the marker. Called by the rebucket job itself AND by
-    every state entry point (sink layout check, compactor, cross-dedup
-    probe) so a crash mid-adoption can never leave roots hashed with
-    new_buckets while the sidecar records the old count — the silent
-    wrong-quarter-of-dirs probe. One FS existence check when no marker.
-    Returns True when a commit was finished."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_delete_path,
-        hadoop_read_text,
-        hadoop_write_text_atomic,
-    )
-
-    marker = f"{state_dir}/{REBUCKET_MARKER}"
-    text = hadoop_read_text(spark, marker)
-    if text is None:
-        return False
-    info = _json.loads(text)
-    if info.get("adopt_sets"):
-        _swap_staged_root(
-            spark, f"{state_dir}/sets__rebucketing", f"{state_dir}/sets"
-        )
-    if info.get("adopt_bands"):
-        _swap_staged_root(
-            spark, f"{state_dir}/bands__rebucketing", f"{state_dir}/bands"
-        )
-    hadoop_write_text_atomic(
-        spark,
-        _os.path.join(state_dir, TABLE_META_FILE),
-        _json.dumps(info["new_meta"]),
-    )
-    hadoop_delete_path(spark, marker)
-    return True
-
-
-def _finish_refit_commit(spark: SparkSession, index_path: str) -> bool:
-    """The refit_streamed_index analog of _finish_rebucket_commit: adopt
-    the staged re-assigned index AND its staged quantizer together (the
-    fresh sidecar rides inside the index stage, so the rename installs
-    root + sidecar as one move). Called by the refit job and by every
-    index entry point (sinks, readers, compactor); closes the crash
-    window where a re-bucketed root goes live while the persisted
-    quantizer still holds the old centroids — restarted sinks and
-    searches would silently mis-route probes."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-
-    marker = index_path + REFIT_MARKER_SUFFIX
-    if not hadoop_path_exists(spark, marker):
-        return False
-    _swap_staged_root(spark, index_path + "__refitting", index_path)
-    _swap_staged_root(
-        spark,
-        index_path + QUANTIZER_DIR_SUFFIX + "__refitting",
-        index_path + QUANTIZER_DIR_SUFFIX,
-    )
-    hadoop_delete_path(spark, marker)
-    return True
+    return compact_root(spark, NEARDUP, state_dir)[1]
 
 
 def rebucket_neardup_state(
@@ -2177,8 +1693,8 @@ def rebucket_neardup_state(
     at creation (the probe and writer must derive pmod with the same
     count), so a state bucketed for a 10M-doc corpus keeps those buckets
     at 1B docs — per-bucket size, and with it every targeted-dir read,
-    grows linearly. This offline migration rewrites BOTH roots under a
-    new count via the staged swap the runtime migration already uses:
+    grows linearly. This offline migration folds pending deletions and
+    rewrites the roots under a new count:
 
     - sets: ``__kb = pmod(xxhash64(id), new_buckets)`` (the sink's exact
       derivation), rewritten partitioned; dedup on id folded in (rows
@@ -2194,123 +1710,44 @@ def rebucket_neardup_state(
       exactly the refuse-to-mis-hash contract, now pointing at the new
       truth.
 
-    Crash-safe via the marker commit (r12, mirroring
-    _ensure_neardup_root's __migrating discipline): both roots are
-    STAGED first (``<root>__rebucketing``), then a commit marker
-    holding the NEW sidecar is written atomically, then stages are
-    adopted (delete + rename) and the sidecar installed from the
-    marker. Pre-marker crashes leave the old state intact (stages are
-    garbage, cleaned on the next run); post-marker crashes are finished
-    by _finish_rebucket_commit from ANY state entry point — the sink's
-    layout check, the compactor, the cross-dedup probe, or the next
-    rebucket — so roots hashed with new_buckets can never serve probes
-    pruned with the old sidecar count.
+    Crash-safe through the marker commit (``__rebucket_commit.json``;
+    streaming/state.py): roots hashed with new_buckets can never serve
+    probes pruned with the old sidecar count. A flat state (no sidecar
+    ``n_buckets``) is migrated INTO the bucketed layout — the bulk form
+    of the sink's one-time runtime migration, for when a long-running
+    flat state crosses into the batch ≪ index regime where bucketing
+    wins (SCALE.md's measured rule). Run at reset cadence, offline (not
+    concurrently with the sink — same single-writer assumption as the
+    appends). Returns {"old_buckets", "new_buckets", "sets_rows",
+    "bands_rows", "rows_removed"}."""
 
-    A flat state (no sidecar ``n_buckets``) is migrated INTO the
-    bucketed layout — the bulk form of the sink's one-time runtime
-    migration, for when a long-running flat state crosses into the
-    batch ≪ index regime where bucketing wins (SCALE.md's measured
-    rule). Run at reset cadence, offline (not concurrently with the
-    sink — same single-writer assumption as the appends). Returns
-    {"old_buckets", "new_buckets", "sets_rows", "bands_rows",
-    "rows_removed"}."""
-    import json as _json
+    def relayout(meta: dict) -> dict:
+        bands = _resolve_neardup_layout(meta)[1] if bucket_bands is None else bucket_bands
+        return {"n_buckets": new_buckets, "bucket_bands": bands}
 
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        hadoop_write_text_atomic,
-        read_table_meta,
+    meta, rows, removed = rebucket_root(
+        spark,
+        NEARDUP,
+        state_dir,
+        relayout,
+        lambda new_meta, names: {
+            "new_meta": new_meta,
+            "adopt_sets": True,
+            "adopt_bands": "bands" in names,
+        },
     )
-
-    sets_path = f"{state_dir}/sets"
     bands_path = f"{state_dir}/bands"
-    # finish a crashed predecessor's adoption, then clear any orphaned
-    # pre-commit stages (theirs, or a pre-marker crash of our own past)
-    _finish_rebucket_commit(spark, state_dir)
-    # fold pending deletions: the re-bucketed state and its fresh
-    # sidecar row totals must see the shrunk corpus
-    fold_neardup_tombstones(spark, state_dir)
-    for orphan in (sets_path + "__rebucketing", bands_path + "__rebucketing"):
-        if hadoop_path_exists(spark, orphan):
-            hadoop_delete_path(spark, orphan)
-    meta = read_table_meta(spark, state_dir) or {}
-    recorded, bands_bucketed = _resolve_neardup_layout(meta)
-    if bucket_bands is None:
-        bucket_bands = bands_bucketed
-
-    removed = 0
-
-    def _stage(path: str, kb, dedup_cols: list[str]) -> int:
-        """Write the re-bucketed copy to <path>__rebucketing (never
-        touching the live root) and return its row count."""
-        nonlocal removed
-        df = spark.read.parquet(path)
-        if "__kb" in df.columns:
-            df = df.drop("__kb")
-        before = df.count()
-        keep = df.dropDuplicates(dedup_cols)
-        tmp = path + "__rebucketing"
-        (
-            keep.withColumn("__kb", kb(keep))
-            .repartition("__kb")
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .parquet(tmp)
-        )
-        # fail BEFORE the commit marker on clusters that disable
-        # _SUCCESS markers — adoption keys on them
-        _require_stage_success(spark, tmp)
-        n = spark.read.parquet(tmp).count()
-        removed += before - n
-        return n
-
-    sets_rows = _stage(
-        sets_path,
-        lambda df: F.pmod(F.xxhash64(F.col("id")), F.lit(new_buckets)),
-        ["id"],
-    )
-    if bucket_bands:
-        bands_rows = _stage(
-            bands_path,
-            lambda df: F.pmod(F.col("band_hash"), F.lit(new_buckets)),
-            ["id", "band_idx"],
-        )
-    else:
+    bands_rows = rows.get("bands")
+    if bands_rows is None:  # the flat band root stayed as it was
         bands_rows = (
             spark.read.parquet(bands_path).count()
             if hadoop_path_exists(spark, bands_path)
             else 0
         )
-    merged = dict(meta)
-    merged.update(
-        {
-            "n_buckets": new_buckets,
-            "bucket_bands": bucket_bands,
-            MAINT_COUNTER_KEY: 0,
-            # rebucket deduped: the true doc count replaces the
-            # redelivery-inclusive running total (rebucket_due reads it)
-            MAINT_ROWS_KEY: sets_rows,
-        }
-    )
-    merged.pop(MAINT_REDELIVERY_KEY, None)
-    # COMMIT POINT: stages complete -> atomic marker carrying the new
-    # sidecar -> adopt (swaps + sidecar install + marker delete)
-    hadoop_write_text_atomic(
-        spark,
-        f"{state_dir}/{REBUCKET_MARKER}",
-        _json.dumps(
-            {
-                "new_meta": merged,
-                "adopt_sets": True,
-                "adopt_bands": bool(bucket_bands),
-            }
-        ),
-    )
-    _finish_rebucket_commit(spark, state_dir)
     return {
-        "old_buckets": recorded,
+        "old_buckets": _resolve_neardup_layout(meta)[0],
         "new_buckets": new_buckets,
-        "sets_rows": sets_rows,
+        "sets_rows": rows["sets"],
         "bands_rows": bands_rows,
         "rows_removed": removed,
     }
@@ -2359,9 +1796,7 @@ def cross_dedup_against_state(
 
     sets_path = f"{state_dir}/sets"
     bands_path = f"{state_dir}/bands"
-    _finish_rebucket_commit(spark, state_dir)  # adopt a crashed rebucket
-    _recover_root_swap(spark, sets_path)
-    _recover_root_swap(spark, bands_path)
+    open_root(spark, NEARDUP, state_dir)
     meta = read_table_meta(spark, state_dir) or {}
     missing = [k for k in ("num_hashes", "bands", "shingle_n") if k not in meta]
     if missing:
@@ -2437,7 +1872,7 @@ def cross_dedup_against_state(
         bands_a = spark.read.parquet(bands_path)
     # retracted reference docs (delete_neardup_docs) stop flagging
     # deltas immediately, before any fold physically purges them
-    tomb = _neardup_tombstones(spark, state_dir)
+    tomb = read_tombstones(spark, f"{state_dir}/{NEARDUP_TOMBSTONES_DIR}")
     if tomb is not None:
         bands_a = bands_a.join(F.broadcast(tomb), on="id", how="left_anti")
     bands_a = bands_a.select(
@@ -2502,142 +1937,6 @@ def await_stream(query, timeout_s: int, what: str = "streaming query") -> None:
 # Maintenance cadence + refit for the streamed states
 # ---------------------------------------------------------------------------
 
-# Meta-sidecar keys the sinks maintain per micro-batch so a user never
-# has to invent the compaction cadence ("after a redelivery event or N
-# batches") — the compactors reset them after a successful pass.
-MAINT_COUNTER_KEY = "batches_since_compact"
-MAINT_REDELIVERY_KEY = "redelivery_suspected"
-MAINT_LAST_BATCH_KEY = "last_batch_id"
-# lifetime rows appended by the sinks (redelivery copies included — an
-# upper bound on distinct rows, which is the safe side for a "has the
-# stream outgrown its fitted layout" decision); refit_due reads it
-MAINT_ROWS_KEY = "rows_appended"
-# set by the FULL-delete surfaces (delete_postings_docs /
-# delete_indexed_vectors on a versioned root), cleared by the folds:
-# lets maintenance_due treat an explicit erasure wave as always-due even
-# under the versioned sinks' count_tombstones=False cadence (full
-# deletes are rare events, unlike steady-state update tombstones)
-MAINT_FULLDELETE_KEY = "full_delete_pending"
-
-QUANTIZER_DIR_SUFFIX = "__quantizer"
-
-
-def _update_maintenance_meta(
-    spark: SparkSession,
-    root: str,
-    batch_id: int | None = None,
-    rows_appended: int | None = None,
-    extra: dict | None = None,
-) -> None:
-    """Per-micro-batch maintenance bookkeeping in the state root's meta
-    sidecar (driver-side, one small-file rewrite — negligible next to the
-    batch's parquet append): bump ``batches_since_compact``; when the
-    delivered ``batch_id`` is not strictly increasing, flag
-    ``redelivery_suspected`` — a restarted checkpoint re-numbers batches
-    from an earlier id, which is exactly the event that accumulates the
-    byte-identical duplicate rows the compactors reclaim; accumulate
-    ``rows_appended`` when the caller passes the batch's row count (the
-    refit_due policy reads it). Read-modify-write, so layout keys
-    (n_buckets, bucket_bands, n_cells) survive; ATOMIC replace
-    (hadoop_write_text_atomic) — this file carries the layout/signature
-    contract and is rewritten every micro-batch, so an in-place truncate
-    would expose every crash to a torn JSON that bricks the next sink
-    start. Single-writer assumption: same as the sinks' own (one
-    streaming query appends to a state root at a time)."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
-    meta = read_table_meta(spark, root) or {}
-    meta[MAINT_COUNTER_KEY] = int(meta.get(MAINT_COUNTER_KEY, 0)) + 1
-    if batch_id is not None:
-        last = meta.get(MAINT_LAST_BATCH_KEY)
-        if last is not None and int(batch_id) <= int(last):
-            meta[MAINT_REDELIVERY_KEY] = True
-        meta[MAINT_LAST_BATCH_KEY] = max(
-            int(batch_id), int(last) if last is not None else int(batch_id)
-        )
-    if rows_appended:
-        meta[MAINT_ROWS_KEY] = int(meta.get(MAINT_ROWS_KEY, 0)) + int(
-            rows_appended
-        )
-    if extra:
-        # layout facts the writing sink knows (e.g. the IVF sinks'
-        # fitted n_cells) — consistent by construction: the quantizer
-        # guard refuses a sink whose quantizer (hence n_cells) disagrees
-        # with the persisted state
-        meta.update(extra)
-    hadoop_write_text_atomic(
-        spark, _os.path.join(root, TABLE_META_FILE), _json.dumps(meta)
-    )
-
-
-def _reset_maintenance_meta(
-    spark: SparkSession, root: str, clear_redelivery: bool = True
-) -> None:
-    """After a successful compaction/refit: zero the batch counter and
-    clear the redelivery flag (layout keys untouched).
-
-    ``clear_redelivery=False`` preserves the known-duplicates signal for
-    a compaction pass that could NOT reclaim (the _compact_dedup_state
-    bail-out: every duplicate lives in a non-targetable partition dir) —
-    maintenance_due then stays true, honestly reporting that duplicates
-    persist; each subsequent maybe_* call re-pays only the thin detect
-    scan."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
-    meta = read_table_meta(spark, root)
-    if meta is None:
-        return
-    meta[MAINT_COUNTER_KEY] = 0
-    if clear_redelivery:
-        meta.pop(MAINT_REDELIVERY_KEY, None)
-    hadoop_write_text_atomic(
-        spark, _os.path.join(root, TABLE_META_FILE), _json.dumps(meta)
-    )
-
-
-def _set_meta_flag(spark: SparkSession, root: str, key: str, value) -> None:
-    """Read-modify-write ONE sidecar key (atomic replace, layout keys
-    survive) — _update_maintenance_meta without the batch-counter bump,
-    for event flags set outside the sinks' per-batch loop (the delete
-    surfaces). ``value=None`` clears the key; clearing an absent key
-    skips the rewrite."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
-    meta = read_table_meta(spark, root)
-    if meta is None:
-        meta = {}
-    if value is None:
-        if key not in meta:
-            return
-        meta.pop(key)
-    else:
-        meta[key] = value
-    hadoop_write_text_atomic(
-        spark, _os.path.join(root, TABLE_META_FILE), _json.dumps(meta)
-    )
-
-
 def maintenance_due(
     spark: SparkSession,
     root: str,
@@ -2684,8 +1983,8 @@ def maintenance_due(
     # postings/near-dup roots keep tombstones under "tombstones", the
     # IVF root under "_tombstones" (invisible to its own parquet scan)
     if count_tombstones and (
-        hadoop_path_exists(spark, f"{root}/tombstones")
-        or hadoop_path_exists(spark, f"{root}/_tombstones")
+        hadoop_path_exists(spark, f"{root}/{TOMBSTONES_DIR}")
+        or hadoop_path_exists(spark, f"{root}/{IVF_TOMBSTONES_DIR}")
     ):
         return True
     return int(meta.get(MAINT_COUNTER_KEY, 0)) >= every_n_batches
@@ -2729,6 +2028,7 @@ def save_streamed_index_quantizer(
     fit IvfIndex object, and a RESTARTED pipeline must assign with the
     SAME centroids or probes would read the wrong cells. n_cells x dim
     doubles — driver-small at any realistic n_cells."""
+    open_root(spark, IVF, index_path)  # a pending refit owns the quantizer
     _write_quantizer(spark, index_path + QUANTIZER_DIR_SUFFIX, ivf)
 
 
@@ -2753,7 +2053,7 @@ def load_streamed_index_quantizer(
 
     from bharatmlstack_spark.operators.lsh import IvfIndex
 
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
+    open_root(spark, IVF, index_path)
     rows = (
         spark.read.parquet(index_path + QUANTIZER_DIR_SUFFIX)
         .orderBy("cell")
@@ -2778,10 +2078,9 @@ def _ensure_quantizer_consistent(
     same fit object — or load_streamed_index_quantizer's rebuild, or
     refit's returned ivf — compares bit-equal. A state with no persisted
     quantizer (fresh, or pre-r12) persists the handed one, arming the
-    guard for every subsequent restart."""
+    guard for every subsequent restart. Callers open the root first."""
     import numpy as np
 
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
     qdir = index_path + QUANTIZER_DIR_SUFFIX
     if not hadoop_path_exists(spark, qdir):
         save_streamed_index_quantizer(spark, index_path, ivf)
@@ -2952,6 +2251,7 @@ def stream_ann_ivfpq_sink(
     compressed storage (qdrant.go:351-412)."""
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
+    open_root(spark, IVF, index_path)
     _ensure_ivfpq_quantizer_consistent(spark, index_path, ivfpq)
     meta0 = read_table_meta(spark, index_path)
     if meta0 is not None and not meta0.get("ivfpq", False):
@@ -3053,16 +2353,10 @@ def refit_due(
     over the argument. False when the sidecar lacks the counters (no
     sink has run, or a pre-r12 state) — the caller then has no basis to
     refit from metadata alone."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    _finish_refit_commit(spark, index_path)  # adopt a crashed refit first
-    meta = read_table_meta(spark, index_path) or {}
-    n_cells = meta.get("n_cells")
-    rows = meta.get(MAINT_ROWS_KEY)
-    if not n_cells or not rows:
-        return False
-    tcr = int(meta.get("target_cell_rows", target_cell_rows))
-    return int(rows) >= factor * int(n_cells) * tcr
+    due = outgrown(
+        spark, IVF, index_path, "n_cells", target_cell_rows, factor, "target_cell_rows"
+    )
+    return due is not None
 
 
 def rebucket_due(
@@ -3081,15 +2375,7 @@ def rebucket_due(
     population isn't the scaling axis there; the regime rule in
     SCALE.md decides the flat->bucketed migration instead) or when no
     sink has recorded counters yet."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    _finish_rebucket_commit(spark, state_dir)  # adopt a crashed rebucket
-    meta = read_table_meta(spark, state_dir) or {}
-    n_buckets = meta.get("n_buckets")
-    rows = meta.get(MAINT_ROWS_KEY)
-    if not n_buckets or not rows:
-        return False
-    return int(rows) >= factor * int(n_buckets) * target_bucket_rows
+    return outgrown(spark, NEARDUP, state_dir, "n_buckets", target_bucket_rows, factor) is not None
 
 
 def maybe_refit_streamed_index(
@@ -3117,14 +2403,13 @@ def maybe_refit_streamed_index(
     a due-at-16 decision could execute a refit at the 10_000 default,
     collapsing the index to min_cells and silently rewriting the
     operator's configured layout target."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    meta = read_table_meta(spark, index_path) or {}
-    resolved = int(meta.get("target_cell_rows", target_cell_rows))
-    if not refit_due(spark, index_path, resolved, factor):
+    due = outgrown(
+        spark, IVF, index_path, "n_cells", target_cell_rows, factor, "target_cell_rows"
+    )
+    if due is None:
         return None
     return refit_streamed_index(
-        spark, index_path, target_cell_rows=resolved, **refit_kwargs
+        spark, index_path, target_cell_rows=due[1], **refit_kwargs
     )
 
 
@@ -3143,16 +2428,11 @@ def maybe_rebucket_neardup_state(
     stats (the NEXT sink run must pass state_buckets=new_buckets — the
     layout guard enforces it), or None when not due. OFFLINE ONLY, same
     single-writer caveat as maybe_refit_streamed_index."""
-    import math as _math
-
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    if not rebucket_due(spark, state_dir, target_bucket_rows, factor):
+    due = outgrown(spark, NEARDUP, state_dir, "n_buckets", target_bucket_rows, factor)
+    if due is None:
         return None
-    meta = read_table_meta(spark, state_dir) or {}
-    new_buckets = max(1, _math.ceil(int(meta[MAINT_ROWS_KEY]) / target_bucket_rows))
     return rebucket_neardup_state(
-        spark, state_dir, new_buckets, bucket_bands=bucket_bands
+        spark, state_dir, new_size(due), bucket_bands=bucket_bands
     )
 
 
@@ -3189,17 +2469,13 @@ def refit_streamed_index(
     3. re-fit the coarse quantizer on the accumulated vectors
        (IvfIndex.fit — deterministic hash-ordered sample, ≤ sample_size
        driver rows) and re-assign every vector (one Arrow GEMM pass);
-    4. marker commit (r12, the _finish_rebucket_commit discipline):
-       stage the re-assigned state at ``<index>__refitting`` with the
+    4. marker commit (``__refit_commit.json``; streaming/state.py):
+       the re-assigned state is staged at ``<index>__refitting`` with the
        fresh meta sidecar INSIDE it (n_cells + target_cell_rows + reset
-       maintenance counters — it rides the rename), stage the NEW
-       quantizer at ``<index>__quantizer__refitting``, then write the
-       atomic commit marker and adopt both stages via delete + rename.
-       A crash before the marker leaves the live root + quantizer
-       untouched; after it, _finish_refit_commit finishes the adoption
-       from any entry point (sinks, readers, compactor, next refit) —
-       the index and its quantizer can never go live separately, which
-       is what made a restarted sink silently mis-route probes.
+       maintenance counters — it rides the rename), the NEW quantizer at
+       ``<index>__quantizer__refitting``; the index and its quantizer
+       can never go live separately, which is what made a restarted sink
+       silently mis-route probes.
 
     Search/dedup equivalence (pytest-pinned): assignments change, but
     identical vectors still share a cell under ANY quantizer, so exact-
@@ -3217,33 +2493,23 @@ def refit_streamed_index(
 
     from bharatmlstack_spark.operators.feature_store import (
         TABLE_META_FILE,
-        hadoop_delete_path,
         hadoop_list_partition_dirs,
         hadoop_write_text_atomic,
+        read_table_meta,
     )
     from bharatmlstack_spark.operators.lsh import IvfIndex
 
-    # finish a crashed predecessor's adoption, then clear orphaned
-    # pre-commit stages
-    _finish_refit_commit(spark, index_path)
-    tmp = index_path + "__refitting"
-    qtmp = index_path + QUANTIZER_DIR_SUFFIX + "__refitting"
-    for orphan in (tmp, qtmp):
-        if hadoop_path_exists(spark, orphan):
-            hadoop_delete_path(spark, orphan)
+    # fold pending vector deletions (after the preamble): the refit
+    # sample, the re-assignment and the new sidecar's row total must all
+    # see the shrunk corpus
+    fold_tombstones(spark, IVF, index_path, id_col)
     if not hadoop_path_exists(spark, index_path):
         raise FileNotFoundError(
             f"refit_streamed_index: no index at {index_path} — nothing "
             "accumulated yet (run a sink first); refusing to fabricate "
             "an empty state"
         )
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
     old_meta = read_table_meta(spark, index_path) or {}
-    # fold pending vector deletions: the refit sample, the re-assignment,
-    # and the fresh sidecar row totals must all see the shrunk corpus
-    # (the staged-root swap would also silently drop the _tombstones dir)
-    fold_index_tombstones(spark, index_path, id_col)
     n_cells_before = len(hadoop_list_partition_dirs(spark, index_path, "cell"))
     raw = spark.read.parquet(index_path)
     total = raw.count()
@@ -3257,18 +2523,9 @@ def refit_streamed_index(
     ivf = IvfIndex(n_cells=n_cells, id_col=id_col, emb_col=emb_col).fit(
         acc, sample_size=sample_size, iters=iters
     )
-    (
-        ivf.index(acc)
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    # the fresh sidecar rides INSIDE the index stage (underscore files
-    # are invisible to parquet discovery): counters zeroed (the refit
-    # subsumed the compaction), fitted cell count + target_cell_rows +
-    # post-dedup row count recorded for the next refit_due decision.
-    # MERGE over the prior meta (the rebucket's discipline) — dropping
+    # the fresh sidecar: counters zeroed (the refit subsumed the
+    # compaction), fitted cell count + target + post-dedup row count for
+    # the next refit_due decision; MERGED over the prior meta — dropping
     # last_batch_id would blind redelivery detection for a stream later
     # restarted from an older checkpoint
     merged = dict(old_meta)
@@ -3281,24 +2538,26 @@ def refit_streamed_index(
         }
     )
     merged.pop(MAINT_REDELIVERY_KEY, None)  # the refit reclaimed them
-    hadoop_write_text_atomic(
+
+    def stage_index(stage: str) -> None:
+        (
+            ivf.index(acc)
+            .repartition("cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(stage)
+        )
+        hadoop_write_text_atomic(
+            spark, _os.path.join(stage, TABLE_META_FILE), _json.dumps(merged)
+        )
+
+    commit_stages(
         spark,
-        _os.path.join(tmp, TABLE_META_FILE),
-        _json.dumps(merged),
+        IVF,
+        index_path,
+        {"index": stage_index, "quantizer": lambda stage: _write_quantizer(spark, stage, ivf)},
+        lambda _: {"n_cells": n_cells},
     )
-    _write_quantizer(spark, qtmp, ivf)
-    # fail BEFORE the commit marker on clusters that disable _SUCCESS
-    # markers — adoption keys on them
-    _require_stage_success(spark, tmp)
-    _require_stage_success(spark, qtmp)
-    # COMMIT POINT: both stages complete -> atomic marker -> adopt
-    # index + quantizer together (aside-rename each, marker dropped)
-    hadoop_write_text_atomic(
-        spark,
-        index_path + REFIT_MARKER_SUFFIX,
-        _json.dumps({"n_cells": n_cells}),
-    )
-    _finish_refit_commit(spark, index_path)
     return {
         "ivf": ivf,
         "n": n,
@@ -3754,15 +3013,9 @@ def stream_postings_sink(
     query touches |terms| buckets (~|terms|/n_buckets of it), the
     term-bucket dirs shard the write across executors, and hot stopword
     terms cost reads only when queried. Size n_buckets so a bucket's
-    postings fit a scan budget (SCALE.md)."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
+    postings fit a scan budget (SCALE.md). On-disk protocol:
+    streaming/state.py."""
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
 
     sig = {
         "n_buckets": int(n_buckets),
@@ -3778,7 +3031,7 @@ def stream_postings_sink(
         # would leave half the index unmaskable — same refusal
         "versioned": bool(allow_updates),
     }
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed rebucket
+    open_root(spark, POSTINGS, index_path)
     meta = read_table_meta(spark, index_path)
     if meta is not None and "n_buckets" in meta:
         for key, want in sig.items():
@@ -3798,11 +3051,7 @@ def stream_postings_sink(
         # fresh root (or pre-contract sidecar): record the signature
         # BEFORE the first append — a crash in between re-runs this
         # idempotently on the next start
-        merged = dict(meta or {})
-        merged.update(sig)
-        hadoop_write_text_atomic(
-            spark, _os.path.join(index_path, TABLE_META_FILE), _json.dumps(merged)
-        )
+        edit_meta(spark, index_path, lambda m: m.update(sig))
 
     toks = _postings_tokens(text_col)
     gen_base = (
@@ -4069,7 +3318,7 @@ def bm25_search_streamed(
     from bharatmlstack_spark.operators.feature_store import read_table_meta
     from bharatmlstack_spark.query_registry import defer_unpersist
 
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed rebucket
+    open_root(spark, POSTINGS, index_path)
     meta = read_table_meta(spark, index_path) or {}
     if "n_buckets" not in meta:
         raise RuntimeError(
@@ -4175,57 +3424,29 @@ def bm25_search_streamed(
 def compact_streamed_postings(spark: SparkSession, index_path: str) -> dict:
     """Physically reclaim at-least-once redelivery duplicates from both
     postings tables (byte-identical by construction — see the sink) so
-    searches can pass dedup=False. Same two-phase targeted rewrite as the
-    other streamed-state compactors (_compact_dedup_state): steady state
-    costs two thin detection scans and zero writes; only duplicate-
-    holding bucket dirs rewrite. The redelivery flag survives a bailed
-    pass (duplicates known but untargetable), keeping maintenance_due
-    honest.
+    searches can pass dedup=False, after folding pending deletions. Same
+    two-phase targeted rewrite as the other streamed-state compactors:
+    steady state costs two thin detection scans and zero writes; only
+    duplicate-holding bucket dirs rewrite. The redelivery flag survives
+    a bailed pass (duplicates known but untargetable), keeping
+    maintenance_due honest.
 
-    Also ROLLS THE CORPUS STATS FORWARD: when the doclen table is known
-    duplicate-free (no bail), (n_docs, sum_dl) are aggregated once and
-    cached in the sidecar — bm25_search_streamed then skips its only
-    O(corpus) piece (the doclen stats scan) for as long as the cache is
-    provably fresh (zero appends since; the sink's per-batch counter is
-    the staleness witness). A bailed pass DROPS the cache: doclen still
-    holds duplicates the stats must not double-count."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed rebucket
-    # fold pending deletions first: the dedup rewrite and the stats
-    # recompute below must see the post-deletion corpus
-    purged = fold_postings_tombstones(spark, index_path)
-    # versioned index: dedup keys include gen. Post-fold every live id
-    # has exactly one generation, so (term, id) would also hold — but
-    # gen-keyed dedup stays conservative if that invariant ever breaks
-    # (it collapses byte-identical redelivery copies either way, and an
-    # unexpected second gen survives for the mask instead of an
-    # arbitrary row winning).
-    gen = ["gen"] if (read_table_meta(spark, index_path) or {}).get(
-        "versioned"
-    ) else []
-    removed_p, bailed_p = _compact_dedup_state(
-        spark, f"{index_path}/{POSTINGS_DIR}", ["term", "id", *gen],
-        "term_bucket",
-    )
-    removed_d, bailed_d = _compact_dedup_state(
-        spark, f"{index_path}/{DOCLEN_DIR}", ["id", *gen], "id_bucket"
-    )
-    bailed = bailed_p or bailed_d
-    # ORDER MATTERS (crash safety): a stale cache from a PREVIOUS pass
-    # must not survive into the counter reset — counter==0 plus old
-    # (n_docs, sum_dl) would be trusted. Drop first (a crash then leaves
-    # the scan path), reset, then recompute into a valid cache.
-    _cache_postings_stats(spark, index_path, valid=False)
-    _reset_maintenance_meta(spark, index_path, clear_redelivery=not bailed)
-    _cache_postings_stats(spark, index_path, valid=not bailed_d)
+    Also ROLLS THE CORPUS STATS FORWARD: the pass drops the cached
+    (n_docs, sum_dl) with its counter reset, and when the doclen table
+    is known duplicate-free (no bail) aggregates them once into the
+    sidecar — bm25_search_streamed then skips its only O(corpus) piece
+    (the doclen stats scan) for as long as the cache is provably fresh
+    (zero appends since; the sink's per-batch counter is the staleness
+    witness). A bailed doclen pass leaves no cache: doclen still holds
+    duplicates the stats must not double-count."""
+    purged, removed, bailed = compact_root(spark, POSTINGS, index_path)
+    _cache_postings_stats(spark, index_path, valid="doclen" not in bailed)
     return {
-        "postings_removed": removed_p,
-        "doclen_removed": removed_d,
+        **removed,
         "tombstones_folded": purged["tombstones"],
         "purged_postings": purged["postings_removed"],
         "purged_doclen": purged["doclen_removed"],
-        "bailed": bailed,
+        "bailed": bool(bailed),
     }
 
 
@@ -4238,35 +3459,20 @@ def _cache_postings_stats(
     skips it. Exactness: Spark's avg over longs is sum-as-long / count
     in double arithmetic, which is precisely ``sum_dl / n_docs`` here —
     the cached path is bit-identical to the scan it replaces."""
-    import json as _json
-    import os as _os
+    doclen_path = f"{index_path}/{DOCLEN_DIR}"
 
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
-    meta = read_table_meta(spark, index_path)
-    if meta is None:
-        return
-    if not valid:
-        if "n_docs" not in meta and "sum_dl" not in meta:
-            return
-        meta.pop("n_docs", None)
-        meta.pop("sum_dl", None)
-        meta.pop("stats_counter", None)
-    else:
-        doclen_path = f"{index_path}/{DOCLEN_DIR}"
+    def edit(meta: dict) -> bool:
+        if not valid:
+            return drop_cached_stats(meta)
         if not hadoop_path_exists(spark, doclen_path):
-            return
+            return False
         row = (
             spark.read.parquet(doclen_path)
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
             .collect()[0]
         )
         if not row["n"]:
-            return
+            return False
         meta["n_docs"] = int(row["n"])
         meta["sum_dl"] = int(row["s"])
         # the batch counter AT WHICH these stats are accurate: searches
@@ -4274,9 +3480,9 @@ def _cache_postings_stats(
         # later append (counter bump) invalidates automatically unless
         # the sink's per-batch rollforward re-stamps it
         meta["stats_counter"] = int(meta.get(MAINT_COUNTER_KEY, 0))
-    hadoop_write_text_atomic(
-        spark, _os.path.join(index_path, TABLE_META_FILE), _json.dumps(meta)
-    )
+        return True
+
+    edit_meta(spark, index_path, edit, create=False)
 
 
 def _roll_postings_stats(
@@ -4317,15 +3523,6 @@ def _roll_postings_stats(
     Crash safety is the stamp ordering: the counter bump lands BEFORE
     the appends (meta-first), this stamp lands AFTER them — a crash
     anywhere between leaves stats_counter < counter and searches scan."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
     last = pre.get(MAINT_LAST_BATCH_KEY)
     fresh_root = last is None
     monotonic = fresh_root or int(batch_id) > int(last)
@@ -4343,13 +3540,13 @@ def _roll_postings_stats(
     sum_dl = old_dl + int(add_dl) - int(dead_dl)
     if n_docs <= 0 or sum_dl < 0:
         return  # arithmetic went impossible — leave the scan path
-    meta = read_table_meta(spark, index_path) or {}
-    meta["n_docs"] = int(n_docs)
-    meta["sum_dl"] = int(sum_dl)
-    meta["stats_counter"] = int(meta.get(MAINT_COUNTER_KEY, 0))
-    hadoop_write_text_atomic(
-        spark, _os.path.join(index_path, TABLE_META_FILE), _json.dumps(meta)
-    )
+
+    def stamp(meta: dict) -> None:
+        meta["n_docs"] = int(n_docs)
+        meta["sum_dl"] = int(sum_dl)
+        meta["stats_counter"] = int(meta.get(MAINT_COUNTER_KEY, 0))
+
+    edit_meta(spark, index_path, stamp)
 
 
 def maybe_compact_streamed_postings(
@@ -4367,44 +3564,6 @@ def maybe_compact_streamed_postings(
     return compact_streamed_postings(spark, index_path)
 
 
-POSTINGS_REBUCKET_MARKER = "__postings_rebucket.json"
-
-
-def _finish_postings_rebucket(spark: SparkSession, index_path: str) -> bool:
-    """(Re-)run a rebucket_postings_index adoption whose commit marker
-    exists — the postings analog of _finish_rebucket_commit, called by
-    the rebucket job itself AND by every index entry point (sink start,
-    search, compactor, the due policy) so a crash mid-adoption can never
-    leave bucket dirs hashed with new_buckets while the sidecar records
-    the old count. One FS existence check when no marker."""
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_delete_path,
-        hadoop_read_text,
-        hadoop_write_text_atomic,
-    )
-
-    marker = f"{index_path}/{POSTINGS_REBUCKET_MARKER}"
-    text = hadoop_read_text(spark, marker)
-    if text is None:
-        return False
-    info = _json.loads(text)
-    for sub in info.get("adopt", ()):
-        _swap_staged_root(
-            spark, f"{index_path}/{sub}__rebucketing", f"{index_path}/{sub}"
-        )
-    hadoop_write_text_atomic(
-        spark,
-        _os.path.join(index_path, TABLE_META_FILE),
-        _json.dumps(info["new_meta"]),
-    )
-    hadoop_delete_path(spark, marker)
-    return True
-
-
 def rebucket_postings_index(
     spark: SparkSession, index_path: str, new_buckets: int
 ) -> dict:
@@ -4415,7 +3574,7 @@ def rebucket_postings_index(
     creation (writer and search must derive pmod with the same count),
     so per-bucket postings — and with them every search's targeted-dir
     read — grow linearly with the corpus until this offline migration
-    resets per-bucket population:
+    folds pending deletions and resets per-bucket population:
 
     - postings: ``term_bucket = pmod(xxhash64(term), new_buckets)`` (the
       sink's exact derivation), dedup on (term, id) folded in (rows are
@@ -4425,102 +3584,26 @@ def rebucket_postings_index(
     - sidecar: records ``new_buckets`` and zeroes the maintenance
       counters; the NEXT sink run must pass n_buckets=new_buckets or the
       start-time guard raises — refuse-to-mis-hash, pointing at the new
-      truth.
+      truth. The corpus stats are re-seeded after adoption.
 
-    Crash-safe via the marker commit: both subroots are STAGED first
-    (``<sub>__rebucketing`` with _SUCCESS required), then an atomic
-    marker carrying the new sidecar is the commit point, then stages
-    are adopted and the marker dropped — pre-marker crashes leave the
-    old index intact, post-marker crashes are finished by
-    _finish_postings_rebucket from any entry point. OFFLINE ONLY (the
-    sinks' single-writer assumption). Returns {"old_buckets",
-    "new_buckets", "postings_rows", "doclen_rows", "rows_removed"}."""
-    import json as _json
-
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
-
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed run
-    # fold pending deletions first: the rewrite below recomputes the
-    # sidecar row totals and stats from the surviving corpus
-    fold_postings_tombstones(spark, index_path)
-    for sub in (POSTINGS_DIR, DOCLEN_DIR):
-        orphan = f"{index_path}/{sub}__rebucketing"
-        if hadoop_path_exists(spark, orphan):
-            hadoop_delete_path(spark, orphan)
-    meta = read_table_meta(spark, index_path) or {}
-    old_buckets = meta.get("n_buckets")
-
-    removed = 0
-
-    def _stage(sub: str, bucket_col: str, key, dedup_cols: list[str]) -> int:
-        nonlocal removed
-        df = spark.read.parquet(f"{index_path}/{sub}")
-        if bucket_col in df.columns:
-            df = df.drop(bucket_col)
-        before = df.count()
-        keep = df.dropDuplicates(dedup_cols)
-        tmp = f"{index_path}/{sub}__rebucketing"
-        (
-            keep.withColumn(bucket_col, F.pmod(key, F.lit(new_buckets)))
-            .repartition(bucket_col)
-            .write.mode("overwrite")
-            .partitionBy(bucket_col)
-            .parquet(tmp)
-        )
-        _require_stage_success(spark, tmp)  # adoption keys on _SUCCESS
-        n = spark.read.parquet(tmp).count()
-        removed += before - n
-        return n
-
-    # versioned index: gen rides the dedup keys (same rationale as
-    # compact_streamed_postings — conservative if the one-live-gen
-    # post-fold invariant ever breaks) and the gen column rides the
-    # rewrite untouched
-    gen = ["gen"] if meta.get("versioned") else []
-    postings_rows = _stage(
-        POSTINGS_DIR, "term_bucket", F.xxhash64("term"), ["term", "id", *gen]
-    )
-    doclen_rows = _stage(
-        DOCLEN_DIR, "id_bucket", F.xxhash64("id"), ["id", *gen]
-    )
-    merged = dict(meta)
-    merged.update(
-        {
-            "n_buckets": int(new_buckets),
-            MAINT_COUNTER_KEY: 0,
-            # deduped: the true postings count replaces the redelivery-
-            # inclusive running total (rebucket_postings_due reads it)
-            MAINT_ROWS_KEY: postings_rows,
-        }
-    )
-    merged.pop(MAINT_REDELIVERY_KEY, None)
-    # a PRE-rebucket stats cache must not ride into the marker: the
-    # marker installs counter==0, and a crash before the post-adoption
-    # recompute would leave stale (n_docs, sum_dl) trusted — drop them;
-    # the success path recomputes right after adoption
-    merged.pop("n_docs", None)
-    merged.pop("sum_dl", None)
-    hadoop_write_text_atomic(
+    Crash-safe through the marker commit (``__postings_rebucket.json``;
+    streaming/state.py). OFFLINE ONLY (the sinks' single-writer
+    assumption). Returns {"old_buckets", "new_buckets", "postings_rows",
+    "doclen_rows", "rows_removed"}."""
+    meta, rows, removed = rebucket_root(
         spark,
-        f"{index_path}/{POSTINGS_REBUCKET_MARKER}",
-        _json.dumps(
-            {"new_meta": merged, "adopt": [POSTINGS_DIR, DOCLEN_DIR]}
-        ),
+        POSTINGS,
+        index_path,
+        lambda meta: {"n_buckets": int(new_buckets)},
+        lambda new_meta, names: {"new_meta": new_meta, "adopt": names},
     )
-    _finish_postings_rebucket(spark, index_path)
-    # the rewrite just deduped doclen: roll the corpus stats forward so
-    # searches skip the doclen scan until the next append (see
-    # _cache_postings_stats)
+    # the rewrite just deduped doclen: seed the stats cache
     _cache_postings_stats(spark, index_path, valid=True)
     return {
-        "old_buckets": old_buckets,
+        "old_buckets": meta.get("n_buckets"),
         "new_buckets": int(new_buckets),
-        "postings_rows": postings_rows,
-        "doclen_rows": doclen_rows,
+        "postings_rows": rows[POSTINGS_DIR],
+        "doclen_rows": rows[DOCLEN_DIR],
         "rows_removed": removed,
     }
 
@@ -4537,15 +3620,7 @@ def rebucket_postings_due(
     ``n_buckets x target_bucket_rows`` by ``factor``. One sidecar read;
     the default target is postings ROWS per bucket (thin rows), not
     docs."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed run
-    meta = read_table_meta(spark, index_path) or {}
-    n_buckets = meta.get("n_buckets")
-    rows = meta.get(MAINT_ROWS_KEY)
-    if not n_buckets or not rows:
-        return False
-    return int(rows) >= factor * int(n_buckets) * target_bucket_rows
+    return outgrown(spark, POSTINGS, index_path, "n_buckets", target_bucket_rows, factor) is not None
 
 
 def maybe_rebucket_postings_index(
@@ -4559,20 +3634,10 @@ def maybe_rebucket_postings_index(
     ``new_buckets = ceil(rows / target_bucket_rows)``. OFFLINE ONLY,
     same single-writer caveat as the other reset-job maybe_* forms.
     Returns the rebucket stats, or None when the index still fits."""
-    import math as _math
-
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    if not rebucket_postings_due(spark, index_path, target_bucket_rows, factor):
+    due = outgrown(spark, POSTINGS, index_path, "n_buckets", target_bucket_rows, factor)
+    if due is None:
         return None
-    meta = read_table_meta(spark, index_path) or {}
-    new_buckets = max(
-        1, _math.ceil(int(meta[MAINT_ROWS_KEY]) / target_bucket_rows)
-    )
-    return rebucket_postings_index(spark, index_path, new_buckets)
-
-
-TOMBSTONES_DIR = "tombstones"
+    return rebucket_postings_index(spark, index_path, new_size(due))
 
 
 def delete_postings_docs(
@@ -4594,62 +3659,23 @@ def delete_postings_docs(
       rows, only those rewrite, and the tombstone table resets.
 
     Deleting also DROPS the cached corpus stats (they counted the doc)
-    — the next compaction recomputes them. Idempotent: deleting an
-    absent or already-deleted id is a no-op row. ``doc_ids``: a list of
-    ids or a single-column DataFrame. Returns the number of tombstones
-    appended. Offline or between-batch (the sinks' single-writer
-    assumption covers the sidecar update).
+    — the next compaction recomputes them. On a versioned index a
+    delete masks every generation, a re-ingest landing while the
+    tombstone is live included (deletes are terminal until folded — the
+    right-to-be-forgotten stance; updates mask only older gens), and it
+    is always due for maintenance. Idempotent: deleting an absent or
+    already-deleted id is a no-op row. ``doc_ids``: a list of ids or a
+    single-column DataFrame, cast to the stored id type. Returns the
+    number of tombstones appended. Offline or between-batch (the sinks'
+    single-writer assumption covers the sidecar update). Protocol:
+    streaming/state.py (delete_ids).
 
     Caveat (the whole family's): RE-ingesting a deleted id while its
     tombstone is live stays masked, and the next fold purges the new
     rows too — the anti-join can't date rows. Fold first, or version
     the id; the sink's single-arrival contract's deletion corollary."""
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    return delete_ids(spark, POSTINGS, index_path, doc_ids)
 
-    _finish_postings_rebucket(spark, index_path)
-    meta = read_table_meta(spark, index_path) or {}
-    if "n_buckets" not in meta:
-        raise RuntimeError(
-            f"postings index {index_path} has no meta sidecar — not a "
-            "stream_postings_sink root."
-        )
-    # the stored doclen id type is the authority: tombstones are cast to
-    # it so the fold's derived-bucket hashing can never mis-target
-    # (xxhash64 is type-sensitive); a doclen-less root has nothing to
-    # delete and the earlier sidecar guard already refused a non-index
-    id_type = (
-        spark.read.parquet(f"{index_path}/{DOCLEN_DIR}").schema["id"].dataType
-    )
-    # drop the cache BEFORE the tombstone lands: a crash in between
-    # leaves a cache-less (scan-path) index with no tombstones — the
-    # delete simply didn't happen; the reverse order would leave a live
-    # tombstone with a cache that still counts the doc (search guards on
-    # the tombstone set anyway — belt and braces)
-    _cache_postings_stats(spark, index_path, valid=False)
-    # versioned index: a delete is gen_lt = GEN_MAX — every generation
-    # is dead, INCLUDING a re-ingest that lands while the tombstone is
-    # live (deletes are terminal until folded — the right-to-be-
-    # forgotten stance; updates, by contrast, mask only older gens)
-    n = _append_tombstones(
-        spark,
-        f"{index_path}/{TOMBSTONES_DIR}",
-        doc_ids,
-        id_type,
-        gen_lt=GEN_MAX if meta.get("versioned") else None,
-    )
-    if n and meta.get("versioned"):
-        # an erasure wave must not wait out the versioned auto_maintain
-        # cadence (count_tombstones=False): flag it always-due; the fold
-        # clears the flag with the tombstone table. Flag AFTER the
-        # append — a crash in between leaves tombstones that the default
-        # cron/offline cadence still counts, never a flag with no wave.
-        _set_meta_flag(spark, index_path, MAINT_FULLDELETE_KEY, True)
-    return n
-
-
-# an update tombstone masks gens strictly below gen_lt; a full delete is
-# "everything below +inf" — long max, unreachable by any real batch id
-GEN_MAX = (1 << 63) - 1
 
 GEN_BASE_MARKER = "__bmls_gen_base.json"
 
@@ -4694,109 +3720,21 @@ def _gen_base_for_checkpoint(
 
 
 def _postings_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
-    """The live tombstone set, or None when empty/absent — searches
-    broadcast it (deleted docs are a tiny fraction of a corpus; a
-    deletion wave large enough to strain a broadcast is a compaction
-    trigger, not a search-side problem).
-
-    Normalized to ONE row per id. On a versioned index the table carries
-    ``gen_lt`` (update tombstones) — the max per id wins (a doc updated
-    at gen 3 then 5 masks everything below 5; updated then deleted masks
-    everything below GEN_MAX); rows from a plain-delete file with a null
-    gen_lt coalesce to GEN_MAX. Unversioned tables stay one ``id``
-    column."""
-    t = _read_tombstones(spark, f"{index_path}/{TOMBSTONES_DIR}")
-    if t is None or "gen_lt" not in t.columns:
-        return t
-    return t.groupBy("id").agg(
-        F.max(F.coalesce("gen_lt", F.lit(GEN_MAX))).alias("gen_lt")
-    )
-
-
-def _mask_tombstoned(
-    df: DataFrame, tomb: DataFrame, id_col: str = "id"
-) -> DataFrame:
-    """Apply the broadcast tombstone mask to an indexed frame: plain
-    one-column tombstones anti-join on the id; versioned tombstones
-    (id, gen_lt) anti-join on ``id matches AND gen < gen_lt`` so only
-    the dead generations disappear — the live (re-ingested) generation
-    keeps scoring. ONE implementation shared by the postings searches,
-    the IVF reader, and the folds' detection scans, so mask and purge
-    can never disagree about what "dead" means. ``tomb``'s id column is
-    named ``id`` (the tombstone-table schema); ``id_col`` names the
-    data frame's."""
-    if "gen_lt" not in tomb.columns:
-        t = tomb.select(F.col("id").alias(id_col))
-        return df.join(F.broadcast(t), on=id_col, how="left_anti")
-    t = tomb.select(F.col("id").alias("__t_id"), "gen_lt")
-    cond = (df[id_col] == t["__t_id"]) & (df["gen"] < t["gen_lt"])
-    return df.join(F.broadcast(t), on=cond, how="left_anti")
+    """The postings index's live tombstone set, normalized to one row per
+    id (state.read_tombstones), or None."""
+    return read_tombstones(spark, f"{index_path}/{TOMBSTONES_DIR}")
 
 
 def fold_postings_tombstones(spark: SparkSession, index_path: str) -> dict:
     """Physically remove tombstoned docs from both postings tables and
     reset the tombstone table — called by compact_streamed_postings (the
     maintenance pass amortizes the rewrite), callable standalone after a
-    deletion wave. Targeted like every rewrite here
-    (_purge_tombstoned_rows, the fold core shared across the tombstone
-    family): the postings dirs come from ONE thin id-column detection
-    scan; the doclen dirs are DERIVED (pmod of the stored hash — no
-    scan). The tombstone table is removed LAST, so the searches'
-    anti-join mask survives every crash point.
+    deletion wave. The postings dirs come from ONE thin detection scan;
+    the doclen dirs are DERIVED (pmod of the id hash — no scan). The
+    tombstone table is removed LAST, so the searches' anti-join mask
+    survives every crash point (state.fold_tombstones).
     Returns {"tombstones", "postings_removed", "doclen_removed"}."""
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        read_table_meta,
-    )
-    from bharatmlstack_spark.query_registry import defer_unpersist
-
-    t = _postings_tombstones(spark, index_path)
-    if t is None or t.isEmpty():
-        # a crash between a prior fold's tombstone-dir delete and its
-        # flag clear would otherwise leave the always-due flag firing a
-        # no-op fold every maintenance check forever
-        _set_meta_flag(spark, index_path, MAINT_FULLDELETE_KEY, None)
-        return {"tombstones": 0, "postings_removed": 0, "doclen_removed": 0}
-    t = defer_unpersist(F.broadcast(t).persist())
-    n_t = t.count()
-    nb = int(read_table_meta(spark, index_path)["n_buckets"])
-    doclen_touched = [
-        r[0]
-        for r in t.select(F.pmod(F.xxhash64("id"), F.lit(nb)).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    removed = {
-        "tombstones": n_t,
-        "postings_removed": _purge_tombstoned_rows(
-            spark, f"{index_path}/{POSTINGS_DIR}", t, "id", "term_bucket"
-        ),
-        "doclen_removed": _purge_tombstoned_rows(
-            spark,
-            f"{index_path}/{DOCLEN_DIR}",
-            t,
-            "id",
-            "id_bucket",
-            touched=doclen_touched,
-        ),
-    }
-    hadoop_delete_path(spark, f"{index_path}/{TOMBSTONES_DIR}")
-    # the erasure wave is physically purged — drop the always-due flag
-    _set_meta_flag(spark, index_path, MAINT_FULLDELETE_KEY, None)
-    return removed
-
-
-# the IVF index root is one cell-partitioned parquet table, so its
-# tombstones live in an underscore-prefixed subdir — Spark's file
-# discovery skips _-prefixed paths, keeping them invisible to
-# spark.read.parquet(index_path) while staying directly readable
-IVF_TOMBSTONES_DIR = "_tombstones"
-# versioned IVF (allow_updates): the (id, gen) registry lives BESIDE the
-# root (sibling path — outside the root's discovery AND outside the
-# refit/compaction staged-root swaps, which rename the root itself);
-# id-bucketed so the sink's re-arrival probe reads O(batch) dirs
-IVF_IDS_SUFFIX = "__ids"
-IVF_ID_BUCKETS = 64
+    return fold_tombstones(spark, POSTINGS, index_path)
 
 
 def delete_indexed_vectors(
@@ -4806,7 +3744,8 @@ def delete_indexed_vectors(
     tombstone discipline (delete_postings_docs) applied to the vector
     family: an eager delete would need the id->cell assignment to target
     a rewrite, but readers shouldn't pay a scan to delete, so the ids
-    append to a tiny ``_tombstones`` table that
+    append to a tiny ``_tombstones`` table (underscore-prefixed, so the
+    root's own parquet discovery never reads it) that
     ``read_streamed_ivf_index`` broadcast-anti-joins out — deleted
     vectors leave every search IMMEDIATELY (they can no longer appear in
     any top-k), and ``compact_streamed_index`` / ``refit_streamed_index``
@@ -4821,247 +3760,22 @@ def delete_indexed_vectors(
     its tombstone is live stays masked (the anti-join can't date rows);
     fold first, or version the id — the sink's single-arrival
     contract's deletion corollary."""
-    # the same crash-recovery preamble every other IVF entry point runs
-    # (read_streamed_ivf_index, compact/refit): a crashed refit commit or
-    # flat-swap would otherwise make this raise a spurious "does not
-    # exist" or read a mid-swap root's schema
-    _finish_refit_commit(spark, index_path)
-    _recover_root_swap(spark, index_path)
-    if not hadoop_path_exists(spark, index_path):
-        raise RuntimeError(
-            f"streamed IVF index {index_path} does not exist — refusing "
-            "to record a deletion a search would never see (check the "
-            "path; a sink run creates the index)."
-        )
-    id_type = spark.read.parquet(index_path).schema[id_col].dataType
-    from bharatmlstack_spark.operators.feature_store import read_table_meta
-
-    # versioned index: a delete is gen_lt = GEN_MAX (all generations
-    # dead, terminal until folded — the postings family's stance), and
-    # it keeps the tombstone table's schema UNIFORM: mixing one- and
-    # two-column files would make the parquet read's schema depend on
-    # which file it sampled
-    versioned = (read_table_meta(spark, index_path) or {}).get("versioned")
-    n = _append_tombstones(
-        spark,
-        f"{index_path}/{IVF_TOMBSTONES_DIR}",
-        vec_ids,
-        id_type,
-        gen_lt=GEN_MAX if versioned else None,
-    )
-    if n and versioned:
-        # see delete_postings_docs: erasure waves are always-due even
-        # under the versioned auto_maintain cadence; fold clears it
-        _set_meta_flag(spark, index_path, MAINT_FULLDELETE_KEY, True)
-    return n
-
-
-def _ivf_tombstones(
-    spark: SparkSession, index_path: str, id_col: str
-) -> DataFrame | None:
-    """The live vector tombstone set normalized to one row per id, or
-    None — searches broadcast it (a deletion wave big enough to strain
-    a broadcast is a compaction trigger, not a read-side problem).
-    Versioned indexes carry gen_lt (max per id wins, nulls from
-    plain-delete files coalesce to GEN_MAX — the postings family's
-    normalization); the returned id column is ALWAYS named ``id``
-    (what _mask_tombstoned expects)."""
-    t = _read_tombstones(spark, f"{index_path}/{IVF_TOMBSTONES_DIR}")
-    if t is None:
-        return None
-    # stored under the family-wide "id" column; pre-fix tables used the
-    # index's own id column name — accept either
-    col = "id" if "id" in t.columns else id_col
-    if "gen_lt" not in t.columns:
-        return t.select(F.col(col).alias("id"))
-    return (
-        t.select(F.col(col).alias("id"), "gen_lt")
-        .groupBy("id")
-        .agg(F.max(F.coalesce("gen_lt", F.lit(GEN_MAX))).alias("gen_lt"))
-    )
+    return delete_ids(spark, IVF, index_path, vec_ids, id_col)
 
 
 def fold_index_tombstones(
     spark: SparkSession, index_path: str, id_col: str = "vec_id"
 ) -> dict:
     """Physically purge tombstoned vectors from the cell-partitioned
-    index and reset the tombstone table — compact_streamed_index calls
-    this first; callable standalone after a deletion wave. One thin
-    (id, cell) detection scan finds the cell dirs actually holding
-    tombstoned rows; only those rewrite; a fully-emptied cell dir is
-    dropped explicitly; the tombstone table is removed LAST, so every
-    crash point leaves the anti-join mask protecting reads
-    (_purge_tombstoned_rows — the fold core shared across the
-    tombstone family)."""
-    from bharatmlstack_spark.operators.feature_store import hadoop_delete_path
-    from bharatmlstack_spark.query_registry import defer_unpersist
-
-    t = _ivf_tombstones(spark, index_path, id_col)
-    if t is None or t.isEmpty():
-        # see fold_postings_tombstones: clear a flag orphaned by a crash
-        # between a prior fold's tombstone delete and its flag clear
-        _set_meta_flag(spark, index_path, MAINT_FULLDELETE_KEY, None)
-        return {"tombstones": 0, "rows_removed": 0}
-    t = defer_unpersist(F.broadcast(t).persist())
-    n_t = t.count()
-    # the purge core joins on the DATA's id column name — rename the
-    # normalized tombstone frame's family-wide "id" to it
-    t_purge = t.withColumnRenamed("id", id_col)
-    removed = _purge_tombstoned_rows(spark, index_path, t_purge, id_col, "cell")
-    reg_removed = 0
-    reg_root = f"{index_path}{IVF_IDS_SUFFIX}"
-    if hadoop_path_exists(spark, reg_root):
-        # the versioned registry holds one (id, gen) row per generation:
-        # purge the same dead gens (derived buckets — no scan; rows
-        # carry gen, and the registry's own id column is "id")
-        touched = [
-            r[0]
-            for r in t.select(
-                F.pmod(F.xxhash64("id"), F.lit(IVF_ID_BUCKETS)).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        reg_removed = _purge_tombstoned_rows(
-            spark, reg_root, t, "id", "id_bucket", touched=touched
-        )
-    hadoop_delete_path(spark, f"{index_path}/{IVF_TOMBSTONES_DIR}")
-    # the erasure wave is physically purged — drop the always-due flag
-    _set_meta_flag(spark, index_path, MAINT_FULLDELETE_KEY, None)
-    return {
-        "tombstones": n_t,
-        "rows_removed": removed,
-        "registry_removed": reg_removed,
-    }
-
-
-def _purge_tombstoned_rows(
-    spark: SparkSession,
-    root: str,
-    t: DataFrame,
-    join_col: str,
-    bucket_col: str | None = None,
-    touched: list | None = None,
-) -> int:
-    """Shared core of the tombstone folds (postings / IVF / near-dup):
-    anti-join rewrite of ONLY the partition dirs holding rows matching
-    the (broadcast, persisted) tombstone frame ``t``.
-
-    - ``bucket_col`` None: flat root — full anti-join rewrite via the
-      crash-safe staged swap (root deleted outright when nothing
-      survives);
-    - partitioned: ``touched`` bucket values are either pre-derived by
-      the caller (a pure function of the id — no scan) or found by one
-      thin detection scan; only existing targeted dirs rewrite, and a
-      fully-emptied dir is dropped explicitly (dynamic overwrite leaves
-      absent partitions in place).
-
-    When ``t`` carries a ``gen_lt`` column (versioned postings), "dead"
-    means ``id matches AND gen < gen_lt`` — the same predicate the
-    searches' _mask_tombstoned applies, so purge and mask can never
-    disagree; plain one-column tombstones keep the id equi-join.
-
-    Returns rows removed. Callers delete the tombstone table LAST, so
-    every crash point leaves the read-side anti-join mask protecting
-    queries."""
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        hadoop_list_partition_dirs,
-    )
-    from bharatmlstack_spark.query_registry import defer_unpersist
-
-    gen_aware = "gen_lt" in t.columns
-    tt = (
-        t.select(F.col(join_col).alias("__t_key"), "gen_lt")
-        if gen_aware
-        else None
-    )
-
-    def _anti(df: DataFrame) -> DataFrame:
-        if not gen_aware:
-            return df.join(t, on=join_col, how="left_anti")
-        cond = (df[join_col] == tt["__t_key"]) & (df["gen"] < tt["gen_lt"])
-        return df.join(F.broadcast(tt), on=cond, how="left_anti")
-
-    def _semi(df: DataFrame) -> DataFrame:
-        if not gen_aware:
-            return df.join(t, on=join_col, how="left_semi")
-        cond = (df[join_col] == tt["__t_key"]) & (df["gen"] < tt["gen_lt"])
-        return df.join(F.broadcast(tt), on=cond, how="left_semi")
-
-    # recover a crashed PURGE swap first (its stage suffix __purging is
-    # unknown to _recover_root_swap): a missing live root must adopt the
-    # complete purged stage, or restore the pre-purge aside and re-purge
-    # — returning 0 for a mid-swap root would let the caller delete the
-    # tombstone table over rows that were never purged, resurrecting
-    # deleted data once the mask is gone
-    tmp, aside = root + "__purging", root + ASIDE_SUFFIX
-    if not hadoop_path_exists(spark, root):
-        if hadoop_path_exists(spark, tmp + "/_SUCCESS"):
-            _hadoop_rename(spark, tmp, root)
-        elif hadoop_path_exists(spark, aside):
-            _hadoop_rename(spark, aside, root)
-    _recover_root_swap(spark, root)  # ...and a crashed compaction swap
-    if not hadoop_path_exists(spark, root):
-        return 0
-    if bucket_col is None:
-        df = spark.read.parquet(root)
-        before = df.count()
-        keep = defer_unpersist(_anti(df).persist())
-        n_after = keep.count()
-        if n_after == before:
-            return 0
-        if n_after:
-            keep.write.mode("overwrite").parquet(tmp)
-            _swap_staged_root(spark, tmp, root)
-        else:
-            hadoop_delete_path(spark, root)
-        return before - n_after
-    dirs = hadoop_list_partition_dirs(spark, root, bucket_col)
-    if touched is None:
-        touched = [
-            r[0]
-            for r in _semi(spark.read.parquet(root))
-            .select(bucket_col)
-            .distinct()
-            .collect()
-        ]
-    targeted = {b: dirs[b] for b in touched if b in dirs}
-    if not targeted:
-        return 0
-    scoped = spark.read.option("basePath", root).parquet(*targeted.values())
-    before = scoped.count()
-    keep = defer_unpersist(_anti(scoped).persist())
-    n_after = keep.count()
-    if n_after == before:
-        # nothing in the targeted dirs matched (absent/no-op ids):
-        # skip the identical-data rewrite the flat branch also skips
-        return 0
-    survive: set = set()
-    if n_after:
-        (
-            keep.repartition(bucket_col)
-            .write.mode("overwrite")
-            .partitionBy(bucket_col)
-            .parquet(tmp)
-        )
-        staged = spark.read.parquet(tmp)
-        (
-            staged.repartition(bucket_col)
-            .write.mode("overwrite")
-            .partitionBy(bucket_col)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(root)
-        )
-        survive = {r[0] for r in staged.select(bucket_col).distinct().collect()}
-    for b, path in targeted.items():
-        if b not in survive:
-            hadoop_delete_path(spark, path)
-    hadoop_delete_path(spark, tmp)
-    return before - n_after
-
-
-NEARDUP_TOMBSTONES_DIR = "tombstones"
+    index (and a versioned index's ``__ids`` registry) and reset the
+    tombstone table — compact_streamed_index calls this first; callable
+    standalone after a deletion wave. One thin (id, cell) detection scan
+    finds the cell dirs actually holding tombstoned rows; only those
+    rewrite; a fully-emptied cell dir is dropped; the tombstone table is
+    removed LAST, so every crash point leaves the anti-join mask
+    protecting reads (state.fold_tombstones). Returns {"tombstones",
+    "rows_removed", "registry_removed"}."""
+    return fold_tombstones(spark, IVF, index_path, id_col)
 
 
 def delete_neardup_docs(spark: SparkSession, state_dir: str, doc_ids) -> int:
@@ -5082,22 +3796,7 @@ def delete_neardup_docs(spark: SparkSession, state_dir: str, doc_ids) -> int:
     tombstones appended. Re-ingesting a deleted id while its tombstone
     is live stays masked and the next fold purges the new rows too —
     fold first, or version the id (see delete_postings_docs)."""
-    sets_path = f"{state_dir}/sets"
-    _recover_root_swap(spark, sets_path)
-    if not hadoop_path_exists(spark, sets_path):
-        raise RuntimeError(
-            f"near-dup state {state_dir} has no sets root — refusing to "
-            "record a deletion no probe would ever see (check the path; "
-            "a sink run creates the state)."
-        )
-    id_type = spark.read.parquet(sets_path).schema["id"].dataType
-    return _append_tombstones(
-        spark, f"{state_dir}/{NEARDUP_TOMBSTONES_DIR}", doc_ids, id_type
-    )
-
-
-def _neardup_tombstones(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    return _read_tombstones(spark, f"{state_dir}/{NEARDUP_TOMBSTONES_DIR}")
+    return delete_ids(spark, NEARDUP, state_dir, doc_ids)
 
 
 def fold_neardup_tombstones(spark: SparkSession, state_dir: str) -> dict:
@@ -5106,122 +3805,10 @@ def fold_neardup_tombstones(spark: SparkSession, state_dir: str) -> dict:
     sink's pmod(xxhash64(id)) — no scan); band dirs are hashed by
     band_hash, so those take the one thin detection scan. The tombstone
     table is removed LAST (the cross-probe mask survives every crash
-    point); flat roots take the staged-swap rewrite
-    (_purge_tombstoned_rows)."""
-    from bharatmlstack_spark.operators.feature_store import (
-        hadoop_delete_path,
-        read_table_meta,
-    )
-    from bharatmlstack_spark.query_registry import defer_unpersist
-
-    t = _neardup_tombstones(spark, state_dir)
-    if t is None or t.isEmpty():
-        return {"tombstones": 0, "sets_removed": 0, "bands_removed": 0}
-    t = defer_unpersist(F.broadcast(t).persist())
-    n_t = t.count()
-    recorded, bands_bucketed = _resolve_neardup_layout(
-        read_table_meta(spark, state_dir)
-    )
-    sets_touched = None
-    if recorded is not None:
-        sets_touched = [
-            r[0]
-            for r in t.select(
-                F.pmod(F.xxhash64("id"), F.lit(recorded)).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-    sets_removed = _purge_tombstoned_rows(
-        spark,
-        f"{state_dir}/sets",
-        t,
-        "id",
-        "__kb" if recorded is not None else None,
-        touched=sets_touched,
-    )
-    bands_removed = _purge_tombstoned_rows(
-        spark,
-        f"{state_dir}/bands",
-        t,
-        "id",
-        "__kb" if bands_bucketed else None,
-    )
-    hadoop_delete_path(spark, f"{state_dir}/{NEARDUP_TOMBSTONES_DIR}")
-    return {
-        "tombstones": n_t,
-        "sets_removed": sets_removed,
-        "bands_removed": bands_removed,
-    }
-
-
-def _append_tombstones(
-    spark: SparkSession, path: str, ids, target_type, gen_lt: int | None = None
-) -> int:
-    """Shared append half of the three tombstone surfaces: normalize a
-    list or single-column DataFrame to a distinct ``id`` column CAST to
-    the stored table's id type — Spark's xxhash64 is type-sensitive, so
-    an inferred-type mismatch (int list vs bigint column) would derive
-    the WRONG bucket dirs at fold time and the purge would miss every
-    row while the mask is consumed. Empty waves are a no-op (0), not a
-    schema-inference crash. NULL ids are REJECTED loudly: the mask and
-    purge anti-join on ``id`` never matches NULL, so a null tombstone
-    would stay visible in every search yet be consumed by the next fold
-    — an undeletable row must fail the delete call, not the reader.
-    (A null can also appear post-cast when the caller's id does not
-    cast to the stored type — same refusal, same reason.)
-
-    ``gen_lt`` (versioned postings indexes only): rows of the id with
-    ``gen < gen_lt`` are dead — an UPDATE tombstone. A full delete on a
-    versioned index passes GEN_MAX (everything older than +inf). Omit
-    for unversioned tables (the plain one-column schema). Returns
-    tombstones appended."""
-    if isinstance(ids, DataFrame):
-        frame = ids.select(F.col(ids.columns[0]).alias("id"))
-    else:
-        ids = list(ids)
-        if not ids:
-            return 0
-        if any(i is None for i in ids):
-            raise ValueError(
-                "tombstones cannot target NULL ids — the anti-join mask "
-                "and the fold's purge never match NULL, so the delete "
-                "would silently never take effect. Null-id rows are not "
-                "deletable through the tombstone surface."
-            )
-        frame = spark.createDataFrame([(i,) for i in ids], ["id"])
-    # try_cast, not cast: under ANSI mode a malformed id would abort the
-    # whole wave mid-job with a SparkNumberFormatException — try_cast
-    # funnels it into the NULL refusal below, which names the contract
-    frame = frame.select(
-        F.col("id").try_cast(target_type).alias("id")
-    ).distinct()
-    # this runs on the versioned sinks' per-batch hot path: persist so
-    # the probe's bucket read + semi-join evaluates once, and take both
-    # counts from a single aggregate job (row count + null count)
-    if gen_lt is not None:
-        frame = frame.withColumn("gen_lt", F.lit(int(gen_lt)).cast("long"))
-    frame = frame.persist()
-    try:
-        counts = frame.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.col("id").isNull()).alias("n_null"),
-        ).collect()[0]
-        n, n_null = int(counts["n"]), int(counts["n_null"])
-        if not n:
-            return 0
-        if n_null:
-            raise ValueError(
-                f"tombstone wave contains {n_null} NULL id(s) after "
-                f"casting to the stored type {target_type} — either the "
-                "caller passed NULL ids or the ids do not cast to the "
-                "index's id type. Both would produce a tombstone no "
-                "search or fold can ever match; refusing."
-            )
-        frame.write.mode("append").parquet(path)
-    finally:
-        frame.unpersist()
-    return n
+    point); flat roots take the staged aside swap
+    (state.fold_tombstones). Returns {"tombstones", "sets_removed",
+    "bands_removed"}."""
+    return fold_tombstones(spark, NEARDUP, state_dir)
 
 
 def _postings_id_type(spark: SparkSession, index_path: str) -> str:
@@ -5238,19 +3825,6 @@ def _postings_id_type(spark: SparkSession, index_path: str) -> str:
             .dataType.simpleString()
         )
     return "long"
-
-
-def _read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """Shared read half: the live tombstone set as a distinct ``id``
-    column, or None when absent — callers broadcast it (a deletion wave
-    big enough to strain a broadcast is a fold trigger, and
-    maintenance_due now reports pending tombstones as due work)."""
-    if not hadoop_path_exists(spark, path):
-        return None
-    # all-column dedup, not id-only: a versioned table legitimately
-    # holds several (id, gen_lt) rows for one id — the reader's max
-    # aggregation (not an arbitrary drop) picks the winner
-    return spark.read.parquet(path).dropDuplicates()
 
 
 def phrase_search_streamed(
@@ -5282,7 +3856,7 @@ def phrase_search_streamed(
 
     from bharatmlstack_spark.operators.feature_store import read_table_meta
 
-    _finish_postings_rebucket(spark, index_path)  # adopt a crashed rebucket
+    open_root(spark, POSTINGS, index_path)
     meta = read_table_meta(spark, index_path) or {}
     if "n_buckets" not in meta:
         raise RuntimeError(
@@ -5663,14 +4237,7 @@ def stream_cluster_sink(
     alternative — re-running connected_components over all accumulated
     pairs each batch — is O(corpus x diameter) per batch.
     """
-    import json as _json
-    import os as _os
-
-    from bharatmlstack_spark.operators.feature_store import (
-        TABLE_META_FILE,
-        hadoop_write_text_atomic,
-        read_table_meta,
-    )
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
     from bharatmlstack_spark.operators.graph import connected_components
 
     labels_path = f"{state_dir}/labels"
@@ -5686,7 +4253,7 @@ def stream_cluster_sink(
     def _ensure_layout() -> None:
         if _layout_ok:
             return
-        _recover_root_swap(spark, labels_path)  # crashed compaction swap
+        open_root(spark, CLUSTERS, state_dir)
         meta = read_table_meta(spark, state_dir)
         recorded = (
             int(meta["n_buckets"])
@@ -5707,20 +4274,14 @@ def stream_cluster_sink(
                 f"(state_buckets={recorded}) but this run passed None — "
                 f"refusing to degrade the layout. Pass state_buckets={recorded}."
             )
-        _ensure_neardup_root(
+        ensure_root_layout(
             spark,
             labels_path,
             lambda df: _kb(F.col("node")),
             bucketed,
         )
         if bucketed and recorded is None:
-            merged = dict(meta or {})
-            merged["n_buckets"] = state_buckets
-            hadoop_write_text_atomic(
-                spark,
-                _os.path.join(state_dir, TABLE_META_FILE),
-                _json.dumps(merged),
-            )
+            edit_meta(spark, state_dir, lambda m: m.update(n_buckets=state_buckets))
         _layout_ok.append(True)
 
     def _probe_stored(endpoints: DataFrame):
@@ -5972,7 +4533,7 @@ def read_cluster_state(spark: SparkSession, state_dir: str) -> DataFrame:
     stream_cluster_sink)."""
     labels_path = f"{state_dir}/labels"
     merges_path = f"{state_dir}/merges"
-    _recover_root_swap(spark, labels_path)
+    open_root(spark, CLUSTERS, state_dir)
     labels = spark.read.parquet(labels_path).select("node", "label")
     if hadoop_path_exists(spark, merges_path):
         merges = spark.read.parquet(merges_path)
@@ -5994,11 +4555,11 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict:
     entirely. Maintenance-cadence, single-writer (same contract as the
     other compactors here).
 
-    Crash ordering: the canonical labels SWAP IN first (staged root +
-    _swap_staged_root, recovered by _recover_root_swap from any entry
-    point), the merge log is deleted second. A crash between the two
-    leaves canonical labels plus a stale log whose children no longer
-    appear as any stored label — every resolve join misses, reads stay
+    Crash ordering: the canonical labels SWAP IN first (a staged
+    ``__compacting`` copy adopted by the aside swap, streaming/state.py),
+    the merge log is deleted second. A crash between the two leaves
+    canonical labels plus a stale log whose children no longer appear
+    as any stored label — every resolve join misses, reads stay
     correct, and the next compaction clears the log. The reverse order
     would leave STALE labels with NO log: silently split clusters."""
     from bharatmlstack_spark.operators.feature_store import (
@@ -6006,43 +4567,30 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict:
         read_table_meta,
     )
 
-    labels_path = f"{state_dir}/labels"
     merges_path = f"{state_dir}/merges"
-    _recover_root_swap(spark, labels_path)
-    meta = read_table_meta(spark, state_dir)
-    recorded = (
-        int(meta["n_buckets"]) if meta and meta.get("n_buckets") is not None else None
-    )
+    open_root(spark, CLUSTERS, state_dir)
+    (labels,) = CLUSTERS.layout(state_dir, read_table_meta(spark, state_dir) or {})
     if not hadoop_path_exists(spark, merges_path):
         return {"labels_rewritten": 0, "merges_cleared": 0}
     merges = spark.read.parquet(merges_path)
     n_merges = merges.count()
     res = _resolve_merge_forest(merges)
-    labels = spark.read.parquet(labels_path).select("node", "label")
+    stored = spark.read.parquet(labels.path).select("node", "label")
     canonical = (
-        labels.join(
+        stored.join(
             _maybe_broadcast_forest(res, n_merges),
-            labels.label == res.child,
+            stored.label == res.child,
             "left",
         )
         .select("node", F.coalesce("root", "label").alias("label"))
         .groupBy("node")
         .agg(F.min("label").alias("label"))
     )
-    stage = labels_path + "__compacting"
-    if recorded is not None:
-        (
-            canonical.withColumn(
-                "__kb", F.pmod(F.xxhash64(F.col("node")), F.lit(recorded))
-            )
-            .repartition("__kb")
-            .write.mode("overwrite")
-            .partitionBy("__kb")
-            .parquet(stage)
-        )
-    else:
-        canonical.write.mode("overwrite").parquet(stage)
-    n_labels = spark.read.parquet(stage).count()
-    _swap_staged_root(spark, stage, labels_path)
+    if labels.bucket_col:
+        canonical = canonical.withColumn(labels.bucket_col, labels.bucket())
+    replace_root(spark, canonical, labels.path, "__compacting", labels.bucket_col)
+    n_labels = spark.read.parquet(labels.path).count()
     hadoop_delete_path(spark, merges_path)
     return {"labels_rewritten": n_labels, "merges_cleared": n_merges}
+
+

@@ -348,6 +348,79 @@ def test_rebucket_commit_marker_recovery(spark, tmp_path):
     assert kb == set()
 
 
+def _neardup_state_after_rebucket_marker(spark, tmp_path, name):
+    """A 4-bucket near-dup state over docs 1 and 2 that crashed AFTER
+    its rebucket commit marker: the sets stage (re-bucketed under 16,
+    still holding doc 1) and the marker exist, the live roots are old."""
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    from bharatmlstack_spark.streaming.ingest import (
+        REBUCKET_MARKER,
+        await_stream,
+        stream_neardup_minhash_sink,
+    )
+
+    src = str(tmp_path / f"{name}_src")
+    os.makedirs(src)
+    with open(os.path.join(src, "b0.json"), "w") as f:
+        f.write(json.dumps({"doc_id": 1, "text": "the quick brown fox jumps"}) + "\n")
+        f.write(json.dumps({"doc_id": 2, "text": "a second unrelated document"}) + "\n")
+    state = str(tmp_path / f"{name}_state")
+    stream = spark.readStream.schema("doc_id long, text string").json(src)
+    q = stream_neardup_minhash_sink(
+        stream, state, str(tmp_path / f"{name}_out"), str(tmp_path / f"{name}_ck"),
+        spark, id_col="doc_id", text_col="text", trigger_once=True,
+        state_buckets=4,
+    )
+    await_stream(q, 120, f"neardup sink ({name})")
+    sets = spark.read.parquet(f"{state}/sets").drop("__kb")
+    (
+        sets.withColumn("__kb", F.pmod(F.xxhash64("id"), F.lit(16)))
+        .write.mode("overwrite")
+        .partitionBy("__kb")
+        .parquet(f"{state}/sets__rebucketing")
+    )
+    new_meta = dict(read_table_meta(spark, state))
+    new_meta.update({"n_buckets": 16, "batches_since_compact": 0})
+    with open(os.path.join(state, REBUCKET_MARKER), "w") as f:
+        f.write(
+            json.dumps(
+                {"new_meta": new_meta, "adopt_sets": True, "adopt_bands": False}
+            )
+        )
+    return state
+
+
+@pytest.mark.parametrize("erase", ["purge_docs_everywhere", "delete_then_fold"])
+def test_erasure_finishes_pending_rebucket_commit(spark, tmp_path, erase):
+    """An erasure against a state with a pending rebucket commit must
+    adopt the commit BEFORE it tombstones and purges: otherwise the
+    purge edits the old sets root, and the next entry point swaps in
+    the staged pre-delete copy — the erased doc comes back."""
+    from bharatmlstack_spark.operators.feature_store import read_table_meta
+    from bharatmlstack_spark.streaming.ingest import (
+        REBUCKET_MARKER,
+        compact_neardup_state,
+        delete_neardup_docs,
+        fold_neardup_tombstones,
+        purge_docs_everywhere,
+    )
+
+    state = _neardup_state_after_rebucket_marker(spark, tmp_path, erase)
+    if erase == "purge_docs_everywhere":
+        report = purge_docs_everywhere(spark, [1], neardup_roots=[state], fold=True)
+        assert report[state]["fold"]["sets_removed"] == 1
+    else:
+        assert delete_neardup_docs(spark, state, [1]) == 1
+        assert fold_neardup_tombstones(spark, state)["sets_removed"] == 1
+    compact_neardup_state(spark, state)
+    for root in ("sets", "bands"):
+        ids = {r["id"] for r in spark.read.parquet(f"{state}/{root}").collect()}
+        assert ids == {2}, (root, ids)
+    assert not os.path.exists(os.path.join(state, REBUCKET_MARKER))
+    assert not os.path.exists(f"{state}/sets__rebucketing")
+    assert read_table_meta(spark, state)["n_buckets"] == 16
+
+
 def test_refit_commit_marker_recovery(spark, tmp_path):
     """The refit analog: index stage (with its fresh sidecar inside) and
     quantizer stage adopt TOGETHER from a reader entry point — the
